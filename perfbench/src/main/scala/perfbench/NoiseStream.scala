@@ -160,7 +160,10 @@ final class NoiseStream(seed: Long, work: File) extends Workload {
     if (m.opWalls.nonEmpty) {
       val all = m.opWalls.map(_._2).toSeq
       m.summary("batch_p50_s") = (Stats.median(all), "s", all.size)
-      Stats.tail(all).foreach { case (p, v) => m.summary(f"batch_tail_s (p$p%.1f)") = (v, "s", all.size) }
+      Stats.tail(all) match {
+        case Some((p, v)) => m.summary(f"batch_tail_s (p$p%.1f)") = (v, "s", all.size)
+        case None => m.summary("batch_tail_s (none: needs 11 batches)") = (Double.NaN, "s", all.size)
+      }
     }
     m
   }
