@@ -7,10 +7,13 @@ import org.apache.spark.sql.SparkSession
   * cells, dense |grid|x|sources| haversine matrix in driver NumPy).
   *
   * Runs the distributed flagship at that exact scale — broadcast plan and
-  * geo-cell-bucketed plan — and prints one JSON line. The bucketed plan
-  * additionally prunes cell pairs beyond the 20 km cutoff before any
-  * haversine is computed, which the reference's dense matrix cannot do
-  * (BASELINE.md: ~97% of its grid is out of reach of any source).
+  * geo-cell-bucketed plan — and prints one JSON line. Both plans reject
+  * grid×source pairs beyond the 20 km cutoff before any haversine is
+  * computed, which the reference's dense matrix cannot do (BASELINE.md: ~97%
+  * of its grid is out of reach of any source): the broadcast plan still
+  * visits every pair but rejects a far one with each source's reach window
+  * (a few comparisons), and the bucketed plan pairs only neighbouring geo
+  * cells, then applies the same window.
   *
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.RefScaleBench"
   */

@@ -19,6 +19,27 @@ import graft.functions.GeoFunctions._
   *   - groundNoise = broadcast nested-loop join + haversine range filter +
   *                   partial/final hash aggregation of the power-domain sum.
   *
+  * Both kernels decide "in range" with one predicate, [[inRange]]: a per-source
+  * reach window (computed once per source by [[withReachWindow]], on the small
+  * side) conjoined BEFORE the 20 km haversine. Catalyst generates conjunctions
+  * as short-circuit code, so a pair outside the window costs three comparisons
+  * and a `pmod` instead of the haversine's trig. The window is a strict superset
+  * of the 20 km disc, so the output is unchanged:
+  *
+  *   haversine: sin²(d/2R) = sin²(Δφ/2) + cosφ₁·cosφ₂·sin²(Δλ/2), both terms >= 0
+  *   => d <= r implies |Δφ| <= r/R (the latitude band), and with both
+  *      |φ| <= φmax = |s_lat| + r/R, sin(|Δλ|/2) <= sin(r/2R)/cos(φmax), i.e.
+  *      the wrapped longitude gap |pmod(g_lon - s_lon + 180, 360) - 180| is at
+  *      most 2·asin(sin(r/2R)/cos φmax) (the whole circle once
+  *      cos φmax <= sin(r/2R)).
+  *
+  * Both reaches are widened by (1 + ε), ε = 1e-6 (2 cm at 20 km), which dwarfs
+  * the double rounding of the haversine, so a pair the haversine keeps is never
+  * cut by the window. The gap is wrapped because sin²(Δλ/2) is 360°-periodic:
+  * grid longitudes past ±180 (`grid` does not wrap them) and antimeridian pairs
+  * are measured the short way round, as the haversine measures them. The
+  * argument needs valid latitudes (|lat| <= 90), where cos φ >= 0.
+  *
   * Scale posture (SURVEY.md §7.5): the source side is broadcast when small.
   * For source cardinality beyond broadcast range, [[groundNoiseBucketed]]
   * switches to a geo-cell equi-join: both sides get a coarse cell key of size
@@ -95,19 +116,61 @@ object Noise {
           .otherwise(coalesce(col("geo_altitude"), lit(RefAltM))).as("s_alt"))
   }
 
+  /** Relative widening of both reach-window bounds (see the object header). */
+  private val ReachEps = 1e-6
+
+  /** Latitude reach r/R of the 20 km cutoff, in degrees, widened by ε. */
+  private val LatReachDeg = RMaxM / EarthRadiusM * (180.0 / math.Pi) * (1.0 + ReachEps)
+
+  private val SinHalfReach = math.sin(RMaxM / (2.0 * EarthRadiusM))
+
+  /** Longitude reach in radians of any within-20-km pair whose latitudes are
+    * both at most `phiMaxDeg` in magnitude: 2·asin(sin(r/2R)/cos φmax), or the
+    * whole circle 2π once cos φmax <= sin(r/2R) (the cap around a pole).
+    */
+  private def lonReach(phiMaxDeg: Column): Column = {
+    val cosMax = cos(radians(phiMaxDeg))
+    when(cosMax <= SinHalfReach, lit(2.0 * math.Pi))
+      .otherwise(asin(lit(SinHalfReach) / cosMax) * 2.0d)
+  }
+
+  /** Adds each source's reach window: the latitude band
+    * [`s_lat_lo`, `s_lat_hi`] = s_lat ± r/R·(1+ε) and the longitude reach
+    * `s_lon_reach` in degrees, evaluated at φmax = |s_lat| + the latitude
+    * reach and widened by (1+ε).
+    */
+  private def withReachWindow(sources: DataFrame): DataFrame =
+    sources
+      .withColumn("s_lat_lo", col("s_lat") - LatReachDeg)
+      .withColumn("s_lat_hi", col("s_lat") + LatReachDeg)
+      .withColumn("s_lon_reach",
+        degrees(lonReach(abs(col("s_lat")) + LatReachDeg)) * (1.0 + ReachEps))
+
+  /** The in-range predicate both kernels share: the reach window first (cheap
+    * comparisons that short-circuit), then the exact haversine cutoff on the
+    * pair's `dist_m`.
+    */
+  private def inRange(dist: Column): Column = {
+    val lonGap = abs(pmod(col("g_lon") - col("s_lon") + 180.0d, lit(360.0d)) - 180.0d)
+    col("g_lat") >= col("s_lat_lo") && col("g_lat") <= col("s_lat_hi") &&
+      lonGap <= col("s_lon_reach") && dist <= RMaxM
+  }
+
   /** Ground-level noise estimation (reference functions.py:239-276):
     * grid x sources broadcast join, 20 km haversine cutoff, inverse-square
     * attenuation, per-cell power-domain sum. Output (g_lat, g_lon, db).
     *
-    * The source side is explicitly `broadcast(...)`: physical plan is a
-    * BroadcastNestedLoopJoin with the range predicate evaluated map-side —
-    * zero shuffle before the final hash aggregation on (g_lat, g_lon).
+    * The source side, with its reach window, is explicitly `broadcast(...)`:
+    * physical plan is a BroadcastNestedLoopJoin with the [[inRange]] predicate
+    * evaluated map-side — zero shuffle before the final hash aggregation on
+    * (g_lat, g_lon). The join still visits every grid×source pair, but a pair
+    * outside the source's window is rejected before the haversine.
     */
   def groundNoise(gridDf: DataFrame, sources: DataFrame): DataFrame = {
     val dist = haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon"))
-    gridDf.crossJoin(broadcast(sources))
+    gridDf.crossJoin(broadcast(withReachWindow(sources)))
       .withColumn("dist_m", dist)
-      .filter(col("dist_m") <= RMaxM)
+      .filter(inRange(col("dist_m")))
       .withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
       .groupBy("g_lat", "g_lon")
       .agg(dbPowerSum(col("contrib")).as("db"))
@@ -137,33 +200,34 @@ object Noise {
     * `array_distinct` ring-neighbor cells (distinct, so a 1-cell ring
     * cannot duplicate pairs into the power sum). The join runs on
     * (band, ring cell) — shuffle hash join, partial aggregation map-side —
-    * and the exact haversine predicate filters within buckets. Same
-    * semantics as [[groundNoise]] on any input with valid coordinates
-    * (|lat| <= 90, |lon| <= 180); no cross join, no raise.
+    * and the [[inRange]] predicate (reach window, then the exact haversine)
+    * filters within buckets; the ring width comes from the same [[lonReach]]
+    * the window uses. Longitudes are wrapped before the ring index is taken,
+    * so grid longitudes past ±180 (a grid centred near the antimeridian)
+    * land in the ring cell of their wrapped position. Same semantics as
+    * [[groundNoise]] on any input with valid latitudes (|lat| <= 90); no
+    * cross join, no raise.
     */
   def groundNoiseBucketed(gridDf: DataFrame, sources: DataFrame): DataFrame = {
     // band height in degrees, conservatively >= the latitude reach r/R
     val cellDeg = RMaxM / EarthRadiusM * (180.0 / math.Pi) * 2.0
-    val sinHalf = math.sin(RMaxM / (2.0 * EarthRadiusM))
     def band(lat: Column): Column = floor(lat / cellDeg).cast("long")
     // ring resolution for a band: covers the longitude reach of any pair
     // whose partner sits in this band or a neighboring one
     def nLon(b: Column): Column = {
       val phiMax = least(lit(90.0d),
         greatest(abs(b * cellDeg), abs((b + lit(1L)) * cellDeg)) + cellDeg)
-      val cosMin = cos(radians(phiMax))
-      val reach = when(cosMin <= sinHalf, lit(2.0 * math.Pi))
-        .otherwise(asin(lit(sinHalf) / cosMin) * 2.0d)
-      greatest(lit(1L), floor(lit(2.0 * math.Pi) / reach).cast("long"))
+      greatest(lit(1L), floor(lit(2.0 * math.Pi) / lonReach(phiMax)).cast("long"))
     }
-    // ring index of a longitude at resolution n (lon = 180 clamps into the
-    // last cell; indices are 0..n-1 and wrap modulo n)
+    // ring index of a longitude at resolution n: the longitude is wrapped
+    // into [-180, 180) first; indices are 0..n-1 (the clamp guards rounding
+    // up to n) and wrap modulo n
     def ringCell(lon: Column, n: Column): Column =
-      least(n - 1L, floor((lon + 180.0d) / 360.0d * n).cast("long"))
+      least(n - 1L, floor(pmod(lon + 180.0d, lit(360.0d)) / 360.0d * n).cast("long"))
     val g = gridDf
       .withColumn("cell_i", band(col("g_lat")))
       .withColumn("cell_j", ringCell(col("g_lon"), nLon(col("cell_i"))))
-    val s = sources
+    val s = withReachWindow(sources)
       .withColumn("di", explode(sequence(lit(-1L), lit(1L))))
       .withColumn("cell_i", band(col("s_lat")) + col("di"))
       .withColumn("nl", nLon(col("cell_i")))
@@ -174,7 +238,7 @@ object Noise {
     g.join(s, Seq("cell_i", "cell_j"))
       .withColumn("dist_m",
         haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")))
-      .filter(col("dist_m") <= RMaxM)
+      .filter(inRange(col("dist_m")))
       .withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
       .groupBy("g_lat", "g_lon")
       .agg(dbPowerSum(col("contrib")).as("db"))

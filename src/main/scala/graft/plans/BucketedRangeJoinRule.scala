@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -46,9 +47,14 @@ import graft.functions.GeoFunctions
   * same or a neighboring cell on each axis — the planar 2·rDeg is NOT
   * sufficient here (9.0001° > 8.9932° at r = 500 km, lat 60). No wrapped
   * pair survives the good-filter: both |lon| <= 180 − c means the wrapped
-  * gap 360 − |Δlon| >= 2c > c, beyond any within-radius pair's reach. The exact
-  * branches avoid re-matching this rule by phrasing the predicate as
-  * `r >= haversine(...)` (semantically identical, structurally distinct).
+  * gap 360 − |Δlon| >= 2c > c, beyond any within-radius pair's reach.
+  *
+  * The haversine cutoff may be one conjunct of a larger condition (e.g.
+  * `Noise.groundNoise`'s reach window ANDed before it): the rule finds it
+  * among the conjuncts and re-applies the whole condition, in its original
+  * order, in every branch. The branches avoid re-matching this rule by
+  * phrasing the cutoff as `r >= haversine(...)` (semantically identical,
+  * structurally distinct).
   *
   * This is the rewrite `Noise.groundNoiseBucketed` performs by hand
   * (SURVEY.md §7.5), packaged as a `Rule[LogicalPlan]` so ANY naive
@@ -56,7 +62,7 @@ import graft.functions.GeoFunctions
   * `spark.experimental.extraOptimizations` or the `graft.GraftExtensions`
   * session extension.
   */
-object BucketedRangeJoinRule extends Rule[LogicalPlan] {
+object BucketedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Max radius (m) the rewrite accepts — beyond this the cells grow so
     * coarse that bucketing stops pruning and the cross join is no worse.
@@ -70,27 +76,54 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     // shape 1: Filter above a condition-less cross join
-    case f @ Filter(cond @ LessThanOrEqual(HaversinePattern(latA, lonA, latB, lonB), Literal(r: Double, DoubleType)),
-        join @ Join(left, right, Cross | Inner, None, _))
-        if r > 0 && r <= MaxRadiusM && sidesMatch(left, right, latA, lonA, latB, lonB) =>
-      rewrite(cond, join, latA, lonA, latB, lonB, r)
+    case Filter(RangeCondition(m), join @ Join(left, right, Cross | Inner, None, _))
+        if applies(left, right, m) =>
+      rewrite(m, join)
     // shape 2: the optimizer already pushed the predicate into the join
-    case join @ Join(left, right, Cross | Inner,
-        Some(cond @ LessThanOrEqual(HaversinePattern(latA, lonA, latB, lonB), Literal(r: Double, DoubleType))), _)
-        if r > 0 && r <= MaxRadiusM && sidesMatch(left, right, latA, lonA, latB, lonB) =>
-      rewrite(cond, join.copy(condition = None), latA, lonA, latB, lonB, r)
+    case join @ Join(left, right, Cross | Inner, Some(RangeCondition(m)), _)
+        if applies(left, right, m) =>
+      rewrite(m, join.copy(condition = None))
   }
 
-  private def sidesMatch(left: LogicalPlan, right: LogicalPlan,
-                         latA: Attribute, lonA: Attribute,
-                         latB: Attribute, lonB: Attribute): Boolean =
-    (left.outputSet.contains(latA) && left.outputSet.contains(lonA) &&
+  /** A deterministic condition with one conjunct `haversine(...) <= r`
+    * (0 < r <= MaxRadiusM): its four attributes, the radius, and the whole
+    * condition, conjuncts in their original order, with that conjunct
+    * flipped to `r >= haversine(...)` (semantically identical, structurally
+    * distinct, so the rule's own output never re-matches).
+    */
+  private case class RangeMatch(latA: Attribute, lonA: Attribute,
+      latB: Attribute, lonB: Attribute, r: Double, flipped: Expression)
+
+  private object RangeCondition {
+    def unapply(cond: Expression): Option[RangeMatch] =
+      if (!cond.deterministic) None
+      else {
+        val conjuncts = splitConjunctivePredicates(cond)
+        conjuncts.zipWithIndex.collectFirst {
+          case (LessThanOrEqual(h @ HaversinePattern(latA, lonA, latB, lonB), lit @ Literal(r: Double, DoubleType)), i)
+              if r > 0 && r <= MaxRadiusM =>
+            RangeMatch(latA, lonA, latB, lonB, r,
+              conjuncts.updated(i, GreaterThanOrEqual(lit, h)).reduce(And))
+        }
+      }
+  }
+
+  /** The haversine's two points sit on opposite sides, and no conjunct gives
+    * the join an equi-join key: a join that already pairs rows on a key
+    * (such as `Noise.groundNoiseBucketed`'s cell join) is not a cross join.
+    */
+  private def applies(left: LogicalPlan, right: LogicalPlan, m: RangeMatch): Boolean = {
+    import m.{latA, lonA, latB, lonB}
+    val sidesMatch = (left.outputSet.contains(latA) && left.outputSet.contains(lonA) &&
       right.outputSet.contains(latB) && right.outputSet.contains(lonB)) ||
       (left.outputSet.contains(latB) && left.outputSet.contains(lonB) &&
         right.outputSet.contains(latA) && right.outputSet.contains(lonA))
+    sidesMatch && ExtractEquiJoinKeys.unapply(
+      Join(left, right, Inner, Some(m.flipped), JoinHint.NONE)).isEmpty
+  }
 
-  private def rewrite(rangeCond: Expression, join: Join, latA: Attribute, lonA: Attribute,
-                      latB: Attribute, lonB: Attribute, r: Double): LogicalPlan = {
+  private def rewrite(m: RangeMatch, join: Join): LogicalPlan = {
+    import m.{latA, lonA, latB, lonB, r}
     val (left, right) = (join.left, join.right)
     // orient the pairs to their sides
     val (latL, lonL, latR, lonR) =
@@ -138,23 +171,22 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] {
     val joinCond = And(
       EqualTo(lCellI.toAttribute, rCellIAttr),
       EqualTo(lCellJ.toAttribute, rCellJAttr))
+    // every branch re-applies the whole condition with the cutoff flipped,
+    // so this rule's own output can never re-match shape 1/2 on a later
+    // fixpoint pass
+    val cond = m.flipped
+
     val bucketed = Join(newLeft, genJ, Inner, Some(joinCond), JoinHint.NONE)
     // original predicate still applies inside buckets; drop the helper cols
-    val branchBucketed = Project(join.output, Filter(rangeCond, bucketed))
+    val branchBucketed = Project(join.output, Filter(cond, bucketed))
 
     // --- branches 2+3: exact path for unguarded (polar / seam) rows ---
-    // The predicate is flipped to `r >= haversine` so this rule's own
-    // output can never re-match shape 1/2 on a later fixpoint pass.
-    val exactCond = rangeCond match {
-      case LessThanOrEqual(h, lit) => GreaterThanOrEqual(lit, h)
-      case other => other
-    }
     def exactBranch(l: LogicalPlan, rgt: LogicalPlan): LogicalPlan = {
       val joined = Join(l, rgt, Inner, None, JoinHint.NONE)
       // fresh output aliases: Union children must not share attribute ids
       // with the first branch
       Project(join.output.map(a => Alias(a, a.name)()),
-        Filter(exactCond, joined))
+        Filter(cond, joined))
     }
     val branchBadLeft = exactBranch(Filter(isBad(latL, lonL), left), right)
     val branchBadRight = exactBranch(Filter(isGood(latL, lonL), left),

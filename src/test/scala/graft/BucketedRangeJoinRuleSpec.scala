@@ -37,16 +37,23 @@ class BucketedRangeJoinRuleSpec extends SparkTestBase {
     import graft.functions.GeoFunctions._
     val grid = Noise.grid(spark, Noise.NantesLat, Noise.NantesLon, 1000.0, 10)
     val src = queries.NoiseQueries.sources(spark, "/root/testdata/sf0.001")
-    def swapped() = src.crossJoin(grid)
-      .filter(haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")) <= RMaxM)
+    val cutoff = haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")) <= RMaxM
+    // the cutoff alone, and as the last conjunct after a pair predicate the
+    // optimizer cannot push to either side (it stays in the join condition)
+    val conditions = Seq(cutoff, col("g_lat") <= col("s_lat") && cutoff)
+    def swapped(cond: org.apache.spark.sql.Column) = src.crossJoin(grid)
+      .filter(cond)
       .groupBy("g_lat", "g_lon").agg(count(lit(1)).as("n"))
-    val before = swapped().orderBy("g_lat", "g_lon").collect()
+    val before = conditions.map(swapped(_).orderBy("g_lat", "g_lon").collect())
+    assert(before(1).nonEmpty && before(1).length < before(0).length)
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ BucketedRangeJoinRule
     try {
-      val df = swapped()
-      assert(df.queryExecution.optimizedPlan.toString.contains("__cell_i"))
-      assert(df.orderBy("g_lat", "g_lon").collect().sameElements(before))
+      conditions.zip(before).foreach { case (cond, expected) =>
+        val df = swapped(cond)
+        assert(df.queryExecution.optimizedPlan.toString.contains("__cell_i"))
+        assert(df.orderBy("g_lat", "g_lon").collect().sameElements(expected))
+      }
     } finally {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == BucketedRangeJoinRule)
@@ -143,6 +150,14 @@ class BucketedRangeJoinRuleSpec extends SparkTestBase {
     check(
       Seq((10.0, 179.95), (10.0, 179.0)).toDF("g_lat", "g_lon"),
       Seq((10.0, -179.95, 110.0, 300.0)).toDF("s_lat", "s_lon", "s_db", "s_alt"))
+    // a grid centred near the antimeridian (Matei, Taveuni, Fiji): `grid`
+    // does not wrap, so g_lon spans -180.065..-179.689; the ring index must
+    // wrap those cells, or the bucketed plan drops their pairs (853 of the
+    // 1,127 cells survived before the ring index wrapped)
+    check(
+      Noise.grid(spark, -16.69, -179.877, 1000.0, 20),
+      Seq((-16.69, -179.95, 130.0, 300.0), (-16.70, 179.98, 110.0, 300.0))
+        .toDF("s_lat", "s_lon", "s_db", "s_alt"))
     // mid-latitude control (the q19/q20 regime)
     check(
       Seq((59.0, 10.0), (59.01, 10.0)).toDF("g_lat", "g_lon"),
@@ -164,6 +179,14 @@ class BucketedRangeJoinRuleSpec extends SparkTestBase {
         .run(spark, "/root/testdata/sf0.001")
       assert(!d.queryExecution.optimizedPlan.toString.contains("__cell_i"))
       assert(d.count() > 0)
+      // the hand-bucketed cell join carries the haversine cutoff among its
+      // conjuncts, but it is already an equi-join
+      import spark.implicits._
+      val b = Noise.groundNoiseBucketed(
+        Noise.grid(spark, Noise.NantesLat, Noise.NantesLon, 1000.0, 10),
+        Seq((Noise.NantesLat, Noise.NantesLon, 110.0, 300.0)).toDF("s_lat", "s_lon", "s_db", "s_alt"))
+      assert(!b.queryExecution.optimizedPlan.toString.contains("__cell_i"))
+      assert(b.count() > 0)
     } finally {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == BucketedRangeJoinRule)

@@ -91,6 +91,75 @@ class NoiseSpec extends SparkTestBase {
     assert(a.sameElements(b))
   }
 
+  test("property: the reach window is a superset of the 20 km disc at any latitude and across the antimeridian") {
+    // ScalaCheck-generated cases: 1-4 sources clustered anywhere on the
+    // globe (over-weighting |lat| >= 85, the poles and longitudes near
+    // ±180), a `Noise.grid` around them (longitudes past ±180 when centred
+    // near the seam) plus points within 1 m of the 20 km edge of every
+    // source. Both kernels must return exactly the rows of the plain cross
+    // join that sends every pair straight to the haversine.
+    import org.apache.spark.sql.DataFrame
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    def reference(grid: DataFrame, src: DataFrame): DataFrame =
+      grid.crossJoin(broadcast(src))
+        .withColumn("dist_m", haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")))
+        .filter(col("dist_m") <= RMaxM)
+        .withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
+        .groupBy("g_lat", "g_lon")
+        .agg(dbPowerSum(col("contrib")).as("db"))
+    def wrap(lon: Double): Double = lon - 360.0 * math.floor((lon + 180.0) / 360.0)
+    // destination at `distM` along bearing `brg` (radians), longitude unwrapped
+    def dest(lat: Double, lon: Double, brg: Double, distM: Double): (Double, Double) = {
+      val (p1, d) = (math.toRadians(lat), distM / EarthRadiusM)
+      val p2 = math.asin(math.sin(p1) * math.cos(d) + math.cos(p1) * math.sin(d) * math.cos(brg))
+      val dl = math.atan2(math.sin(brg) * math.sin(d) * math.cos(p1),
+        math.cos(d) - math.sin(p1) * math.sin(p2))
+      (math.toDegrees(p2), lon + math.toDegrees(dl))
+    }
+    val genLat = Gen.frequency(3 -> Gen.choose(-90.0, 90.0), 2 -> Gen.choose(85.0, 90.0),
+      2 -> Gen.choose(-90.0, -85.0), 1 -> Gen.oneOf(90.0, -90.0))
+    val genLon = Gen.frequency(2 -> Gen.choose(-180.0, 180.0), 2 -> Gen.choose(179.7, 180.0),
+      2 -> Gen.choose(-180.0, -179.7), 1 -> Gen.oneOf(180.0, -180.0))
+    val genSource = for {
+      dLat <- Gen.choose(-0.15, 0.15); dLon <- Gen.choose(-0.3, 0.3)
+      db <- Gen.oneOf(80.0, 90.0, 110.0, 130.0)
+    } yield (dLat, dLon, db)
+    val genCase = for {
+      lat <- genLat; lon <- genLon
+      srcs <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, genSource))
+      step <- Gen.oneOf(500.0, 1000.0, 2000.0); n <- Gen.choose(4, 12)
+      bearings <- Gen.listOfN(6, Gen.choose(0.0, 2 * math.Pi))
+      edges <- Gen.listOfN(10, Gen.choose(-1.0, 1.0))
+    } yield (lat, lon, srcs, step, n, bearings, edges)
+    (0 until 24).foreach { i =>
+      val (lat, lon, srcs, step, n, bearings, edges) =
+        genCase.pureApply(Gen.Parameters.default, Seed(20261017L + i))
+      val sources = srcs.map { case (dLat, dLon, db) =>
+        (math.max(-90.0, math.min(90.0, lat + dLat)), wrap(lon + dLon), db, 300.0)
+      }
+      // the grid stays inside |lat| <= 90; its longitudes are left unwrapped
+      val latLimit = 90.0 - n * Noise.latStepDeg(step) - 1e-6
+      val grid = Noise.grid(spark, math.max(-latLimit, math.min(latLimit, lat)), lon, step, n)
+      val edgePts = for {
+        (sLat, sLon, _, _) <- sources
+        (brg, j) <- (bearings ++ Seq(0.0, 0.5, 1.0, 1.5).map(_ * math.Pi)).zipWithIndex
+      } yield dest(sLat, sLon, brg, RMaxM + edges(j % edges.size))
+      val g = grid.union(edgePts.toDF("g_lat", "g_lon"))
+      val src = sources.toDF("s_lat", "s_lon", "s_db", "s_alt")
+      val expected = reference(g, src).orderBy("g_lat", "g_lon").collect()
+      assert(expected.nonEmpty, s"case $i has no pair in range")
+      Seq("groundNoise" -> Noise.groundNoise(g, src),
+        "groundNoiseBucketed" -> Noise.groundNoiseBucketed(g, src)).foreach { case (k, df) =>
+        val got = df.orderBy("g_lat", "g_lon").collect()
+        assert(got.sameElements(expected),
+          s"case $i ($lat, $lon, $sources) $k: ${got.length} rows, reference ${expected.length}; " +
+            s"missing ${expected.diff(got).take(5).toSeq}")
+      }
+    }
+  }
+
   test("haversine properties: symmetry, identity, bounded by pi*R") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)

@@ -44,6 +44,35 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       p.contains("SortMergeJoin"), p)
   }
 
+  test("q19/q20 test the reach window before the haversine; exchange counts unchanged") {
+    import org.apache.spark.sql.catalyst.expressions.{And, Asin, Expression}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case other => Seq(other)
+    }
+    val window = Set("s_lat_lo", "s_lat_hi", "s_lon_reach")
+    // exchanges of the initial plan, pinned to their count before the
+    // window existed (the window adds conjuncts and source-side columns,
+    // never a stage)
+    Seq("q19_noise_flagship" -> 5, "q20_noise_bucketed" -> 5).foreach { case (q, exchanges) =>
+      val plan = queries.Registry.all.find(_.name == q).get.run(spark, dir)
+        .queryExecution.executedPlan
+      val pairConds = collect(plan) {
+        case j: BaseJoinExec if j.condition.exists(_.exists(_.isInstanceOf[Asin])) => j.condition.get
+      }
+      assert(pairConds.size == 1, s"$q: ${plan.treeString}")
+      val cs = conjuncts(pairConds.head)
+      val hav = cs.indexWhere(_.exists(_.isInstanceOf[Asin]))
+      // the haversine is the last conjunct, and every window bound precedes it
+      assert(hav == cs.size - 1, s"$q: $cs")
+      assert(cs.take(hav).flatMap(_.references.map(_.name)).toSet.intersect(window) == window,
+        s"$q: $cs")
+      assert(collect(plan) { case e: Exchange => e }.size == exchanges, s"$q: ${plan.treeString}")
+    }
+  }
+
   test("q28 blocked ngram-jaccard avoids nested-loop joins entirely") {
     val p = planOf("q28_dedup_ngram_jaccard")
     assert(!p.contains("CartesianProduct") && !p.contains("NestedLoop"), p)
