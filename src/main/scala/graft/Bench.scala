@@ -47,32 +47,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE sizes post-shuffle partitions by advisory byte size instead of
-      // refusing to coalesce below the core count (parallelismFirst=true,
-      // the Spark default, keeps >=`cpus` post-shuffle partitions no matter
-      // how tiny the shuffle — at bench scale that charges every small
-      // shuffle a fixed 32-task scheduling cost; at cluster scale sizing is
-      // byte-driven either way). Env-tunable; "false" follows the Spark
-      // docs' own recommendation and is scale-adaptive by construction.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      // Let AQE right-size partitions INSIDE cached plans too: the default
-      // (false) freezes every .cache()/ScopedCache frame at the static
-      // shuffle.partitions count, so iterative operators (CC rounds,
-      // PageRank, k-means) re-scan `cpus` cache partitions of dust per
-      // round and every downstream stage pays `cpus` tasks of fixed
-      // overhead — q330 profiled at ~0.3 CPU-sec/task of pure per-task
-      // cost, 2 such 32-task stages per round. Scale-adaptive by
-      // construction (the cached layout tracks bytes, not core count).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPART", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm file indexes / parquet footers so the alphabetically-first query
     // doesn't absorb session-init cost in its measurement.

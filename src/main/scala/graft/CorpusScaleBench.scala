@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the dedup / decontamination family: blow the `documents`
@@ -18,14 +17,8 @@ object CorpusScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_REPLICAS", "20").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors() - 2).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val base = Tables.load(spark, sfDir, "documents")
@@ -45,7 +38,7 @@ object CorpusScaleBench {
         col("n_chars").as("n_chars_orig"))
       .withColumn("n_chars", length(col("text")))
       .drop("n_chars_orig")
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .cache()
     val nCorpus = corpus.count()
 
@@ -185,7 +178,7 @@ object CorpusScaleBench {
     // the same as the LSH loop's: probe cost tracks the DELTA, not the
     // growing history.
     val sim64All = operators.Dedup.simhash64Table(corpus, shingleK = 3)
-      .repartition(cpus.toInt * 2)
+      .repartition(cpus * 2)
       .cache()
     sim64All.count()
     val s64History0 = sim64All.filter(pmod(col("doc_id"), lit(replicas)) >= nIngest)
@@ -246,7 +239,7 @@ object CorpusScaleBench {
               col("r") * lit(1.0e-4d)).cast("float"))
             .as("embedding"),
           col("label"))
-        .repartition(cpus.toInt * 2)
+        .repartition(cpus * 2)
         .cache()
       nVecs = embCorpus.count()
       // ONE brute pass: the timed materialization IS the ground truth
@@ -293,7 +286,7 @@ object CorpusScaleBench {
               col("r") * lit(1.0e-4d)).cast("float"))
             .as("embedding"),
           col("label"))
-        .repartition(cpus.toInt * 2)
+        .repartition(cpus * 2)
         .cache()
       val nV = embCorpus.count()
       val target = 512
@@ -340,7 +333,7 @@ object CorpusScaleBench {
               col("r") * lit(1.0e-4d)).cast("float"))
             .as("embedding"),
           col("label"))
-        .repartition(cpus.toInt * 2)
+        .repartition(cpus * 2)
         .cache()
       embCorpus.count()
       val histCut = (embReplicas - nIngest).toLong * nBaseVecs

@@ -8,10 +8,11 @@ import graft.plans.{BucketedRangeJoinRule, HashedShingles, MinhashFamily, Rollin
 
 /** SparkSessionExtensions hook registering graft's native expressions and
   * optimizer rules. Activate with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`; for a
-  * session that already exists (extensions only apply at session build),
-  * use [[GraftExtensions.installInto]].
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")` — for any
+  * graft main, `SPARK_GRAFT_CONF="spark.sql.extensions=graft.GraftExtensions"`
+  * (see [[Session]]) — or `.withExtensions(new GraftExtensions)` on a
+  * builder; for a session that already exists (extensions only apply at
+  * session build), use [[GraftExtensions.installInto]].
   * (The Column API in graft.plans works without registration; the range-join
   * rewrite can also be installed per-session via
   * `spark.experimental.extraOptimizations`.)

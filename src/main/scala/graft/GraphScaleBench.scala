@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the connected-components skew posture (r14 verdict:
@@ -42,14 +41,8 @@ object GraphScaleBench {
 
   def main(args: Array[String]): Unit = {
     val nEdges = sys.env.getOrElse("SPARK_GRAFT_EDGES", "100000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors() - 2).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def run(label: String, edges: org.apache.spark.sql.DataFrame)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for selected queries (all when no
   * names given). Usage: sbt "runMain graft.Plans [sfDir] [name ...]".
   * Inspect for: PushedFilters reaching the parquet scan, pruned ReadSchema,
@@ -11,15 +9,8 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // same AQE posture as Bench (r17) so captured plans match what it runs
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a fixed local[4], so captured plans do not depend on the machine
+    val spark = Session.builder(cpus = 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (names.isEmpty || names(name)) {

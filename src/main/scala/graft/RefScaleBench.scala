@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark at the REFERENCE's own demo scale (reference
   * scripts/functions.py:281: genCoords(Nantes, 200, 500) → 1,002,001 grid
   * cells, dense |grid|x|sources| haversine matrix in driver NumPy).
@@ -20,14 +18,8 @@ import org.apache.spark.sql.SparkSession
 object RefScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors() - 2).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val grid = noise.Noise.grid(spark, noise.Noise.NantesLat, noise.Noise.NantesLon, 200.0, 500)
@@ -43,8 +35,7 @@ object RefScaleBench {
     val broadcastRun = time("broadcast")(noise.Noise.groundNoise(grid, sources))
     val bucketedRun = time("bucketed")(noise.Noise.groundNoiseBucketed(grid, sources))
     // same naive query, bucketed automatically by the optimizer rule
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ plans.BucketedRangeJoinRule
+    GraftExtensions.installInto(spark)
     val ruleRun = time("rule_rewritten")(noise.Noise.groundNoise(grid, sources))
     val results = Seq(broadcastRun, bucketedRun, ruleRun)
     val qs = results.map { case (k, v, n) => s""""$k":{"sec":$v,"rows":$n}""" }.mkString("{", ",", "}")

@@ -1,27 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only profiling harness (not part of the library surface). */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same AQE posture as Bench (r17); SPARK_GRAFT_CONF can override
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // Same conf-overlay knob as Verify, for profiling experiments.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      })
-    val spark = builder.getOrCreate()
+    val spark = Session.builder().getOrCreate()
     // SPARK_GRAFT_STAGES=1 prints per-stage wall/cpu time as stages finish.
     if (sys.env.get("SPARK_GRAFT_STAGES").contains("1")) {
       spark.sparkContext.addSparkListener(

@@ -13,35 +13,25 @@ import org.apache.spark.sql.SparkSession
   * measures latency, this measures how much of it is scheduler-serializable
   * overhead.
   *
-  * SPARK_GRAFT_SCHEDULER=FAIR switches from the default FIFO job scheduler
-  * to FAIR with one pool per stream (each undeclared pool gets equal weight,
-  * so K concurrent streams share the cluster evenly instead of queueing
-  * behind whichever stream submitted first). FIFO maximizes throughput on a
-  * drain-the-backlog shape; FAIR bounds per-stream tail latency in the
-  * serve-many-tenants shape — the p95/max fields make the trade measurable.
+  * SPARK_GRAFT_CONF="spark.scheduler.mode=FAIR" switches from the default
+  * FIFO job scheduler to FAIR with one pool per stream (each undeclared
+  * pool gets equal weight, so K concurrent streams share the cluster evenly
+  * instead of queueing behind whichever stream submitted first). FIFO
+  * maximizes throughput on a drain-the-backlog shape; FAIR bounds
+  * per-stream tail latency in the serve-many-tenants shape — the p95/max
+  * fields make the trade measurable.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_STREAMS=8 \
-  *   [SPARK_GRAFT_SCHEDULER=FAIR] sbt "runMain graft.ThroughputBench"
+  *   [SPARK_GRAFT_CONF="spark.scheduler.mode=FAIR"] \
+  *   sbt "runMain graft.ThroughputBench"
   */
 object ThroughputBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val streams = sys.env.getOrElse("SPARK_GRAFT_STREAMS", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors() - 2).toString)
-    val scheduler = sys.env.getOrElse("SPARK_GRAFT_SCHEDULER", "FIFO").toUpperCase
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same AQE posture as Bench (r17)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED_REPART", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.scheduler.mode", scheduler)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.builder(cpus).getOrCreate()
+    val scheduler = spark.conf.get("spark.scheduler.mode", "FIFO").toUpperCase
     spark.sparkContext.setLogLevel("ERROR")
 
     // warm the table plans once so per-stream cost is query work, not listing

@@ -1,8 +1,10 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EqualTo, EvalMode, Expression, If, Literal, RegExpReplace, StringSplit, StringTrim}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType}
+import org.apache.spark.sql.types.DataType
 
 import graft.model.StateVector
 
@@ -30,23 +32,33 @@ object OpenSkyParser {
     val exploded = parsed
       .filter(col("states").isNotNull)
       .select(col("time"), explode(col("states")).as("state"))
-    // try_cast throughout: Spark 4 runs ANSI mode by default, where a plain
-    // cast on a malformed slot would fail the whole job; the reference's
-    // semantics (and any sane ingest of third-party data) is cast-to-null.
     val cols = StateVector.slots.zipWithIndex.map { case ((name, dt), idx) =>
-      val c = col("state").getItem(idx)
-      name match {
-        // "[1,2,3]"-style string → array<int> (reference functions.py:98-107)
-        case "sensors" =>
-          when(c.isNull, lit(null).cast(ArrayType(IntegerType)))
-            .otherwise(split(regexp_replace(c, "[\\[\\]\\s]", ""), ",")
-              .try_cast(ArrayType(IntegerType)))
-            .as(name)
-        case "callsign" => trim(c).try_cast(dt).as(name)
-        case _ => c.try_cast(dt).as(name)
-      }
+      GraftBridge.column(
+        typedSlot(name, dt, GraftBridge.expression(col("state").getItem(idx)))).as(name)
     }
     exploded.select(cols: _*)
+  }
+
+  /** The typing of one positional string slot — the one definition both
+    * this parser and the DSv2 reader ([[graft.sources.OpenSkyReader]])
+    * evaluate, so the batch, refscale and stream paths agree on every value.
+    *
+    * Try-casts throughout: Spark 4 runs ANSI mode by default, where a plain
+    * cast on a malformed slot would fail the whole job; the reference's
+    * semantics (and any sane ingest of third-party data) is cast-to-null.
+    * `sensors` is a "[1,2,3]"-style string (reference functions.py:98-107):
+    * brackets and whitespace stripped, split on ',', elements cast to int;
+    * "[]" is an empty array, not `[null]` (which would invent a sensor).
+    * `callsign` arrives right-padded with spaces and is trimmed.
+    */
+  def typedSlot(name: String, dt: DataType, raw: Expression): Expression = name match {
+    case "sensors" =>
+      val ids = RegExpReplace(raw, Literal("[\\[\\]\\s]"), Literal(""))
+      If(EqualTo(ids, Literal("")),
+        Literal(new GenericArrayData(Array.empty[Any]), dt),
+        Cast(StringSplit(ids, Literal(","), Literal(-1)), dt, None, EvalMode.TRY))
+    case "callsign" => StringTrim(raw)
+    case _ => Cast(raw, dt, None, EvalMode.TRY)
   }
 
   /** Parity helper: rows usable by the noise pipeline — position present and

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -15,6 +15,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.ingest.OpenSkyParser
 import graft.model.StateVector
 
 /** DataSource V2 batch source for OpenSky `/api/states/all` snapshots —
@@ -118,23 +119,25 @@ class OpenSkyReaderFactory(required: StructType, filters: Array[Filter])
     new OpenSkyReader(partition.asInstanceOf[OpenSkyPartition].states, required, filters)
 }
 
-/** Row-at-a-time reader: casts the positional string slots into the pruned
-  * schema and applies the pushed bbox predicates source-side.
+/** Row-at-a-time reader: types the positional string slots exactly as
+  * [[graft.ingest.OpenSkyParser.typedSlot]] does (interpreted, per row), then
+  * projects the pruned schema and applies the pushed bbox predicates
+  * source-side on the typed coordinates.
   */
 class OpenSkyReader(states: Array[Array[String]], required: StructType,
                     filters: Array[Filter]) extends PartitionReader[InternalRow] {
 
-  private val slotIndex = StateVector.slots.map(_._1).zipWithIndex.toMap
-  private val latIdx = slotIndex("latitude")
-  private val lonIdx = slotIndex("longitude")
+  private val typed: Map[String, Expression] =
+    StateVector.slots.zipWithIndex.map { case ((name, dt), idx) =>
+      name -> OpenSkyParser.typedSlot(name, dt, BoundReference(idx, StringType, nullable = true))
+    }.toMap
+  private val projection = required.fields.map(f => typed(f.name))
+  private var raw: InternalRow = _
   private var i = -1
 
-  private def geo(raw: Array[String], idx: Int): Option[Double] =
-    Option(raw(idx)).flatMap(s => s.toDoubleOption)
-
-  private def passes(raw: Array[String]): Boolean = filters.forall { f =>
+  private def passes: Boolean = filters.forall { f =>
     def v(attr: String): Option[Double] =
-      geo(raw, if (attr == "latitude") latIdx else lonIdx)
+      Option(typed(attr).eval(raw)).map(_.asInstanceOf[Double])
     f match {
       case GreaterThan(a, lim: java.lang.Double) => v(a).exists(_ > lim)
       case GreaterThanOrEqual(a, lim: java.lang.Double) => v(a).exists(_ >= lim)
@@ -145,33 +148,16 @@ class OpenSkyReader(states: Array[Array[String]], required: StructType,
   }
 
   override def next(): Boolean = {
-    i += 1
-    while (i < states.length && !passes(states(i))) i += 1
+    do {
+      i += 1
+      if (i < states.length)
+        raw = InternalRow.fromSeq(states(i).toIndexedSeq.map(UTF8String.fromString))
+    } while (i < states.length && !passes)
     i < states.length
   }
 
-  override def get(): InternalRow = {
-    val raw = states(i)
-    val values = required.fields.map { f =>
-      val s = raw(slotIndex(f.name))
-      if (s == null) null
-      else f.dataType match {
-        case StringType if f.name == "callsign" => UTF8String.fromString(s.trim)
-        case StringType => UTF8String.fromString(s)
-        case LongType => s.toLongOption.map(Long.box).orNull
-        case DoubleType => s.toDoubleOption.map(Double.box).orNull
-        case IntegerType => s.toIntOption.map(Int.box).orNull
-        case BooleanType => s.toBooleanOption.map(Boolean.box).orNull
-        case ArrayType(IntegerType, _) => // "[1,2,3]" → array<int>
-          val cleaned = s.replaceAll("[\\[\\]\\s]", "")
-          if (cleaned.isEmpty) new GenericArrayData(Array.empty[Any])
-          else new GenericArrayData(
-            cleaned.split(",").map(x => x.toIntOption.orNull: Any)): ArrayData
-        case _ => null
-      }
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
-  }
+  override def get(): InternalRow =
+    InternalRow.fromSeq(projection.toIndexedSeq.map(_.eval(raw)))
 
   override def close(): Unit = ()
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** DSv2 source tests: schema, values vs the OpenSkyParser on the same
@@ -27,14 +28,25 @@ class OpenSkySourceSpec extends SparkTestBase {
     .option("payload", payload)
     .load()
 
+  // slots the two typing paths once disagreed on: "[]" sensors, "1"/"t"
+  // booleans, space-padded numbers, a tab before a callsign's padding
+  private val edgeRow =
+    """["aa0001", "EDG01\t  ", "Nowhere", " 1757059100", "1757059101",
+      | -1.6, " 47.15", "1e3", "1", "NaN", 90, "x", "[]",
+      | "", 7000, "t", " 5"]""".stripMargin.replace("\n", " ")
+
   test("reads the typed 17-column schema with parser-identical values") {
-    val viaSource = src.orderBy("icao24")
-      .select("icao24", "callsign", "latitude", "on_ground", "sensors", "geo_altitude")
-      .collect().map(_.toString)
-    val viaParser = ingest.OpenSkyParser.parse(Seq(payload).toDS()).orderBy("icao24")
-      .select("icao24", "callsign", "latitude", "on_ground", "sensors", "geo_altitude")
-      .collect().map(_.toString)
-    assert(viaSource.toSeq == viaParser.toSeq)
+    val withEdge = payload.replace("] ] }", s"], $edgeRow ] }")
+    def rows(df: DataFrame): Seq[String] =
+      df.orderBy("icao24").collect().map(_.toString).toSeq
+    val viaSource = rows(spark.read.format("graft.sources.OpenSkyTableProvider")
+      .option("payload", withEdge).load())
+    val viaParser = rows(ingest.OpenSkyParser.parse(Seq(withEdge).toDS()))
+    assert(viaSource.size == 4)
+    assert(viaSource == viaParser)
+    assert(viaSource(2) ==
+      "[aa0001,EDG01\t,Nowhere,1757059100,1757059101,-1.6,47.15,1000.0,true," +
+        "NaN,90.0,null,ArraySeq(),null,7000,true,5]")
     assert(src.schema == graft.sources.OpenSkySnapshot.schema)
   }
 

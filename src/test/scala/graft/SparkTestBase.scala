@@ -5,14 +5,12 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one per JVM — sbt forks one test
-  * JVM, sessions are reused via getOrCreate).
+  * JVM, sessions are reused via getOrCreate): the engine configuration Bench
+  * runs, on a fixed local[4] so pinned partition counts do not depend on the
+  * machine.
   */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = Session.builder(cpus = 4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .getOrCreate()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: time each materialized CTE of one bridged oracle, then the
   * tail, to locate a runaway stage. Not part of the suite.
   * Usage: sbt "Test/runMain graft.SqlFdProbe q348_semantic_dedup_scaled"
@@ -10,12 +8,7 @@ object SqlFdProbe {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q348_semantic_dedup_scaled")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Tables.names.foreach { n =>
       try Tables.load(spark, dir, n).createOrReplaceTempView(n)

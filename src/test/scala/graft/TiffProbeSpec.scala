@@ -1,14 +1,12 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.operators.TiffProbe
 import graft.operators.TiffProbe.SynthPage
 
 /** TIFF prober: both byte orders, multi-page chains, and the hostile-byte
   * sweep (every malformation yields None, never a throw).
   */
-class TiffProbeSpec extends AnyFunSuite {
+class TiffProbeSpec extends SparkTestBase {
 
   private val p1 = SynthPage(640, 480, 8, 1, 1, 3)
   private val p2 = SynthPage(320, 240, 16, 5, 6, 1)
@@ -70,8 +68,6 @@ class TiffProbeSpec extends AnyFunSuite {
 
   test("probeContainers reports tiff with page count and no time axis") {
     // exercised through the unified front door as well
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     import graft.operators.Multimodal
     val b = TiffProbe.synthTiff(littleEndian = false, Seq(p1, p2))
