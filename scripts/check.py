@@ -7,8 +7,15 @@ Reads outDir/<name>/ parquet (written by graft.Verify) and outDir/oracle_sql.jso
 runs each oracle in DuckDB with views over sfDir's tables, and compares:
 column names (sorted), dtypes, row count, and exact values. Dev tool only —
 not part of the Scala library.
+
+DuckDB runs with a memory limit of half the machine's MemTotal and spills
+to outDir/duckdb_tmp, so an oracle that needs more memory spills, or fails
+as one FAIL line, instead of getting the whole process killed. The limit
+bounds DuckDB's buffer manager, not every allocation: q217 peaks near
+10.9 GB resident under an 8 GB limit on a 16 GB machine.
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -17,11 +24,27 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
 
+def memory_limit():
+    """Half of MemTotal as a DuckDB size string, or None if it is unknown."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(line.split()[1]) // 2048}MB"
+    except OSError:
+        pass
+    return None
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
+    limit = memory_limit()
+    if limit:
+        con.execute(f"SET memory_limit='{limit}'")
+    con.execute(f"SET temp_directory='{os.path.join(out_dir, 'duckdb_tmp')}'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))

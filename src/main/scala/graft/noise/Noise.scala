@@ -47,6 +47,12 @@ import graft.functions.GeoFunctions._
   * a shuffle hash/sort-merge equi-join on the cell key, and the exact
   * haversine predicate filters within the bucket. That plan survives 100 TB:
   * no cross join, no driver materialization, shuffle keyed by geo-cell.
+  *
+  * The bucketed plan hash-partitions the grid by an explicit count, a
+  * REPARTITION_BY_NUM exchange that AQE's byte-based coalescing leaves at
+  * `spark.sql.shuffle.partitions` tasks, and sums per cell on the cell key
+  * too, so the join and both sums run in one stage at that parallelism
+  * (details on [[groundNoiseBucketed]]).
   */
 object Noise {
 
@@ -199,14 +205,27 @@ object Noise {
     * Sources explode into the 3 touching bands and, per band, their
     * `array_distinct` ring-neighbor cells (distinct, so a 1-cell ring
     * cannot duplicate pairs into the power sum). The join runs on
-    * (band, ring cell) — shuffle hash join, partial aggregation map-side —
-    * and the [[inRange]] predicate (reach window, then the exact haversine)
-    * filters within buckets; the ring width comes from the same [[lonReach]]
-    * the window uses. Longitudes are wrapped before the ring index is taken,
-    * so grid longitudes past ±180 (a grid centred near the antimeridian)
-    * land in the ring cell of their wrapped position. Same semantics as
-    * [[groundNoise]] on any input with valid latitudes (|lat| <= 90); no
-    * cross join, no raise.
+    * (band, ring cell) and the [[inRange]] predicate (reach window, then the
+    * exact haversine) filters within buckets; the ring width comes from the
+    * same [[lonReach]] the window uses. Longitudes are wrapped before the
+    * ring index is taken, so grid longitudes past ±180 (a grid centred near
+    * the antimeridian) land in the ring cell of their wrapped position.
+    * Same semantics as [[groundNoise]] on any input with valid latitudes
+    * (|lat| <= 90); no cross join, no raise.
+    *
+    * Partitioning: the grid side is `repartition(spark.sql.shuffle.partitions,
+    * cell_i, cell_j)`. The grid's bytes are far below AQE's advisory
+    * partition size (each row's cost is the haversines of its bucket, not
+    * its bytes), so a hash exchange the planner inserted would be coalesced
+    * to one task (`coalescePartitions.parallelismFirst=false`, see
+    * `graft.Session`). AQE neither coalesces nor reads locally a
+    * REPARTITION_BY_NUM exchange, so the join keeps that many tasks whether
+    * it stays a sort-merge join or AQE broadcasts the sources. The per-cell
+    * sum groups on (cell_i, cell_j, g_lat, g_lon): the cell key is a function
+    * of (g_lat, g_lon), so the groups are those of (g_lat, g_lon), and the
+    * join's output partitioning already clusters them, so the partial and
+    * final sum run in the join's stage with no exchange and no one-task
+    * final stage. The cell columns are dropped after.
     */
   def groundNoiseBucketed(gridDf: DataFrame, sources: DataFrame): DataFrame = {
     // band height in degrees, conservatively >= the latitude reach r/R
@@ -224,9 +243,12 @@ object Noise {
     // up to n) and wrap modulo n
     def ringCell(lon: Column, n: Column): Column =
       least(n - 1L, floor(pmod(lon + 180.0d, lit(360.0d)) / 360.0d * n).cast("long"))
+    // partitioned by an explicit count, which AQE keeps (see the scaladoc)
+    val partitions = gridDf.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val g = gridDf
       .withColumn("cell_i", band(col("g_lat")))
       .withColumn("cell_j", ringCell(col("g_lon"), nLon(col("cell_i"))))
+      .repartition(partitions, col("cell_i"), col("cell_j"))
     val s = withReachWindow(sources)
       .withColumn("di", explode(sequence(lit(-1L), lit(1L))))
       .withColumn("cell_i", band(col("s_lat")) + col("di"))
@@ -240,8 +262,10 @@ object Noise {
         haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")))
       .filter(inRange(col("dist_m")))
       .withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
-      .groupBy("g_lat", "g_lon")
+      // the same groups as (g_lat, g_lon), clustered like the join's output
+      .groupBy("cell_i", "cell_j", "g_lat", "g_lon")
       .agg(dbPowerSum(col("contrib")).as("db"))
+      .drop("cell_i", "cell_j")
   }
 
   /** Heatmap sink rows (reference functions.py:290-328): intensity = db/130

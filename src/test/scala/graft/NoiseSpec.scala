@@ -91,6 +91,47 @@ class NoiseSpec extends SparkTestBase {
     assert(a.sameElements(b))
   }
 
+  test("bucketed ground noise joins and sums in shuffle.partitions tasks on a tiny grid") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import spark.implicits._
+    // a few KB of shuffle, far below the advisory partition size: AQE would
+    // coalesce a hash exchange of it to one partition
+    val g = Noise.grid(spark, Noise.NantesLat, Noise.NantesLon, 1000.0, 10)
+    val src = Seq((Noise.NantesLat, Noise.NantesLon, 130.0, 300.0),
+      (Noise.NantesLat + 0.05, Noise.NantesLon - 0.05, 90.0, 3000.0))
+      .toDF("s_lat", "s_lon", "s_db", "s_alt")
+    val group = "bucketed-parallelism"
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val ended = new ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) jobs.add(e)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val out = Noise.groundNoiseBucketed(g, src)
+    try {
+      sc.setJobGroup(group, group)
+      assert(out.collect().nonEmpty)
+    } finally sc.clearJobGroup()
+    eventually(timeout(30.seconds)) {
+      assert(!jobs.isEmpty && jobs.toArray(Array.empty[SparkListenerJobStart])
+        .forall(j => ended.contains(j.jobId)))
+    }
+    sc.removeSparkListener(listener)
+    // the last job's result stage runs the join, the partial and final sum
+    val last = jobs.toArray(Array.empty[SparkListenerJobStart]).maxBy(_.jobId)
+    val result = last.stageInfos.maxBy(_.stageId)
+    assert(result.numTasks == spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      last.stageInfos.map(i => i.stageId -> i.numTasks))
+    assert(out.schema.map(f => f.name -> f.dataType.typeName) ==
+      Seq("g_lat" -> "double", "g_lon" -> "double", "db" -> "double"))
+  }
+
   test("property: the reach window is a superset of the 20 km disc at any latitude and across the antimeridian") {
     // ScalaCheck-generated cases: 1-4 sources clustered anywhere on the
     // globe (over-weighting |lat| >= 85, the poles and longitudes near

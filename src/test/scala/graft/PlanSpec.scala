@@ -53,9 +53,10 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       case other => Seq(other)
     }
     val window = Set("s_lat_lo", "s_lat_hi", "s_lon_reach")
-    // exchanges of the initial plan, pinned to their count before the
-    // window existed (the window adds conjuncts and source-side columns,
-    // never a stage)
+    // exchanges of the initial plan (the window adds conjuncts and
+    // source-side columns, never a stage); q20's sources are broadcast at
+    // this scale, so its grid-side hash exchange takes the place of the
+    // per-cell sum's
     Seq("q19_noise_flagship" -> 5, "q20_noise_bucketed" -> 5).foreach { case (q, exchanges) =>
       val plan = queries.Registry.all.find(_.name == q).get.run(spark, dir)
         .queryExecution.executedPlan
@@ -71,6 +72,38 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         s"$q: $cs")
       assert(collect(plan) { case e: Exchange => e }.size == exchanges, s"$q: ${plan.treeString}")
     }
+  }
+
+  test("q20 hash-partitions the grid by count, and sums per cell without another exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val plan = queries.Registry.all.find(_.name == "q20_noise_bucketed").get.run(spark, dir)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // AQE neither coalesces nor reads locally a REPARTITION_BY_NUM exchange
+    val byCell = plan.collect {
+      case ShuffleExchangeExec(h: HashPartitioning, _, REPARTITION_BY_NUM, _) => h
+    }
+    assert(byCell.size == 1, plan.treeString)
+    assert(byCell.head.numPartitions == n, plan.treeString)
+    assert(byCell.head.expressions.flatMap(_.references.map(_.name)) == Seq("cell_i", "cell_j"),
+      plan.treeString)
+    def reachesPairJoin(p: SparkPlan): Boolean = p match {
+      case _: Exchange => false
+      case j: BaseJoinExec if j.output.exists(_.name == "s_lat") && j.output.exists(_.name == "g_lat") => true
+      case other => other.children.exists(reachesPairJoin)
+    }
+    val perCell = plan.collect {
+      case a: HashAggregateExec if a.groupingExpressions.exists(_.references.exists(_.name == "g_lat")) => a
+    }
+    assert(perCell.nonEmpty, plan.treeString)
+    perCell.foreach(a => assert(reachesPairJoin(a), plan.treeString))
   }
 
   test("q28 blocked ngram-jaccard avoids nested-loop joins entirely") {
