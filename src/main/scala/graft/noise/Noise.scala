@@ -17,7 +17,8 @@ import graft.functions.GeoFunctions._
   *                   (never materialized on the driver; scales to any n);
   *   - sources     = a CASE WHEN classification (functions.py:213-227);
   *   - groundNoise = broadcast nested-loop join + haversine range filter +
-  *                   partial/final hash aggregation of the power-domain sum.
+  *                   partial/final hash aggregation of the power-domain sum,
+  *                   all in the join's stage (see Partitioning below).
   *
   * Both kernels decide "in range" with one predicate, [[inRange]]: a per-source
   * reach window (computed once per source by [[withReachWindow]], on the small
@@ -48,11 +49,12 @@ import graft.functions.GeoFunctions._
   * haversine predicate filters within the bucket. That plan survives 100 TB:
   * no cross join, no driver materialization, shuffle keyed by geo-cell.
   *
-  * The bucketed plan hash-partitions the grid by an explicit count, a
-  * REPARTITION_BY_NUM exchange that AQE's byte-based coalescing leaves at
-  * `spark.sql.shuffle.partitions` tasks, and sums per cell on the cell key
-  * too, so the join and both sums run in one stage at that parallelism
-  * (details on [[groundNoiseBucketed]]).
+  * Partitioning: both kernels hash-partition their inputs by an explicit
+  * count ([[byCount]]), which AQE's byte-based coalescing leaves at
+  * `spark.sql.shuffle.partitions` tasks, on the keys the per-cell sum
+  * groups by. The join keeps that partitioning, so the join, the partial and
+  * final sum and whatever consumes the result (`heatmapRows`, a sink) run in
+  * one stage at that parallelism, with no exchange after the join.
   */
 object Noise {
 
@@ -152,6 +154,21 @@ object Noise {
       .withColumn("s_lon_reach",
         degrees(lonReach(abs(col("s_lat")) + LatReachDeg)) * (1.0 + ReachEps))
 
+  /** `df` hash-partitioned on `cols` into `spark.sql.shuffle.partitions`
+    * partitions, as a REPARTITION_BY_NUM exchange. The noise kernels' inputs
+    * are a few MB (a row's cost is its haversines, not its bytes), far below
+    * AQE's advisory partition size, so with
+    * `coalescePartitions.parallelismFirst=false` (see `graft.Session`) AQE
+    * would coalesce a hash exchange the planner inserted to one partition,
+    * or read it locally once it turns the join into a broadcast, and the
+    * join and the sums would run in one task. AQE neither coalesces nor reads
+    * locally an exchange partitioned by an explicit count.
+    */
+  private def byCount(df: DataFrame, cols: String*): DataFrame = {
+    val partitions = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    df.repartition(partitions, cols.map(col): _*)
+  }
+
   /** The in-range predicate both kernels share: the reach window first (cheap
     * comparisons that short-circuit), then the exact haversine cutoff on the
     * pair's `dist_m`.
@@ -167,14 +184,20 @@ object Noise {
     * attenuation, per-cell power-domain sum. Output (g_lat, g_lon, db).
     *
     * The source side, with its reach window, is explicitly `broadcast(...)`:
-    * physical plan is a BroadcastNestedLoopJoin with the [[inRange]] predicate
-    * evaluated map-side — zero shuffle before the final hash aggregation on
-    * (g_lat, g_lon). The join still visits every grid×source pair, but a pair
-    * outside the source's window is rejected before the haversine.
+    * physical plan is a BroadcastNestedLoopJoin with the [[inRange]] predicate.
+    * The join still visits every grid×source pair, but a pair outside the
+    * source's window is rejected before the haversine.
+    *
+    * Partitioning: the grid is hash-partitioned on (g_lat, g_lon) by
+    * [[byCount]] (one shuffle of the grid), and the join keeps the grid's
+    * partitioning, so the partial and final sum on (g_lat, g_lon) need no
+    * exchange: the join, both sums and the consumer of the result run in one
+    * stage of `spark.sql.shuffle.partitions` tasks (an exchange the planner
+    * inserted for the sum would be coalesced by AQE to one task).
     */
   def groundNoise(gridDf: DataFrame, sources: DataFrame): DataFrame = {
     val dist = haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon"))
-    gridDf.crossJoin(broadcast(withReachWindow(sources)))
+    byCount(gridDf, "g_lat", "g_lon").crossJoin(broadcast(withReachWindow(sources)))
       .withColumn("dist_m", dist)
       .filter(inRange(col("dist_m")))
       .withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
@@ -213,19 +236,18 @@ object Noise {
     * Same semantics as [[groundNoise]] on any input with valid latitudes
     * (|lat| <= 90); no cross join, no raise.
     *
-    * Partitioning: the grid side is `repartition(spark.sql.shuffle.partitions,
-    * cell_i, cell_j)`. The grid's bytes are far below AQE's advisory
-    * partition size (each row's cost is the haversines of its bucket, not
-    * its bytes), so a hash exchange the planner inserted would be coalesced
-    * to one task (`coalescePartitions.parallelismFirst=false`, see
-    * `graft.Session`). AQE neither coalesces nor reads locally a
-    * REPARTITION_BY_NUM exchange, so the join keeps that many tasks whether
-    * it stays a sort-merge join or AQE broadcasts the sources. The per-cell
-    * sum groups on (cell_i, cell_j, g_lat, g_lon): the cell key is a function
-    * of (g_lat, g_lon), so the groups are those of (g_lat, g_lon), and the
-    * join's output partitioning already clusters them, so the partial and
-    * final sum run in the join's stage with no exchange and no one-task
-    * final stage. The cell columns are dropped after.
+    * Partitioning: both sides, the grid and the exploded sources, are
+    * hash-partitioned on (cell_i, cell_j) by [[byCount]], so the join keeps
+    * `spark.sql.shuffle.partitions` tasks whether it stays a sort-merge join
+    * or AQE broadcasts either side at run time. (A micro-batch's sources,
+    * parsed from one JSON payload in one partition, cannot be sized by the
+    * planner, so a small cached grid is broadcast instead; a planner-inserted
+    * exchange of the sources would then be read locally in one task.) The
+    * per-cell sum groups on (cell_i, cell_j, g_lat, g_lon): the cell key is a
+    * function of (g_lat, g_lon), so the groups are those of (g_lat, g_lon),
+    * and the join's output partitioning already clusters them, so the
+    * partial and final sum run in the join's stage with no exchange and no
+    * one-task final stage. The cell columns are dropped after.
     */
   def groundNoiseBucketed(gridDf: DataFrame, sources: DataFrame): DataFrame = {
     // band height in degrees, conservatively >= the latitude reach r/R
@@ -243,12 +265,9 @@ object Noise {
     // up to n) and wrap modulo n
     def ringCell(lon: Column, n: Column): Column =
       least(n - 1L, floor(pmod(lon + 180.0d, lit(360.0d)) / 360.0d * n).cast("long"))
-    // partitioned by an explicit count, which AQE keeps (see the scaladoc)
-    val partitions = gridDf.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val g = gridDf
       .withColumn("cell_i", band(col("g_lat")))
       .withColumn("cell_j", ringCell(col("g_lon"), nLon(col("cell_i"))))
-      .repartition(partitions, col("cell_i"), col("cell_j"))
     val s = withReachWindow(sources)
       .withColumn("di", explode(sequence(lit(-1L), lit(1L))))
       .withColumn("cell_i", band(col("s_lat")) + col("di"))
@@ -257,7 +276,7 @@ object Noise {
         transform(sequence(lit(-1L), lit(1L)),
           dj => pmod(ringCell(col("s_lon"), col("nl")) + dj, col("nl"))))))
       .drop("di", "nl")
-    g.join(s, Seq("cell_i", "cell_j"))
+    byCount(g, "cell_i", "cell_j").join(byCount(s, "cell_i", "cell_j"), Seq("cell_i", "cell_j"))
       .withColumn("dist_m",
         haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")))
       .filter(inRange(col("dist_m")))

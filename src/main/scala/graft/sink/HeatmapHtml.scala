@@ -10,19 +10,20 @@ import org.apache.spark.sql.DataFrame
   * plain lat/lon canvas, colored by intensity, with the dB legend.
   *
   * This is a driver-side SINK (like any single-file writer): the DataFrame
-  * is aggregated/limited upstream; only the final heatmap rows (bounded by
-  * the grid size, not the input data) are collected for templating. For
-  * cluster-scale output use `df.write.parquet/json/csv` instead
-  * (Noise.heatmapRows is already sink-agnostic).
+  * is aggregated upstream; the final heatmap rows (bounded by the grid size,
+  * not the input data) are collected for templating. For cluster-scale
+  * output use `df.write.parquet/json/csv` instead (Noise.heatmapRows is
+  * already sink-agnostic).
   */
 object HeatmapHtml {
 
-  /** Write heatmap rows (g_lat, g_lon, db, intensity) to `path`. `maxCells`
-    * caps the collected rows defensively.
+  /** Write heatmap rows (g_lat, g_lon, db, intensity) to `path`, one cell per
+    * row. The rows are collected by one result job that reads every
+    * partition in parallel; `spark.driver.maxResultSize` bounds what the
+    * driver takes.
     */
-  def write(heatRows: DataFrame, path: String, maxCells: Int = 2000000): Unit = {
-    val rows = heatRows.select("g_lat", "g_lon", "db", "intensity")
-      .limit(maxCells).collect()
+  def write(heatRows: DataFrame, path: String): Unit = {
+    val rows = heatRows.select("g_lat", "g_lon", "db", "intensity").collect()
     if (rows.isEmpty) {
       Files.writeString(Paths.get(path), "<html><body>no data</body></html>")
       return

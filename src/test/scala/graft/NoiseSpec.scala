@@ -91,45 +91,60 @@ class NoiseSpec extends SparkTestBase {
     assert(a.sameElements(b))
   }
 
-  test("bucketed ground noise joins and sums in shuffle.partitions tasks on a tiny grid") {
-    import java.util.concurrent.ConcurrentLinkedQueue
-    import org.apache.spark.scheduler._
-    import org.scalatest.concurrent.Eventually._
-    import org.scalatest.time.SpanSugar._
+  /** Task count of the result stage of the last job that collecting `df`
+    * runs, with every (stage, tasks) of that job for the failure message.
+    */
+  private def resultStageTasks(df: org.apache.spark.sql.DataFrame): (Int, Seq[(Int, Int)]) = {
+    val last = jobsOf(assert(df.collect().nonEmpty)).maxBy(_.jobId)
+    (last.stageInfos.maxBy(_.stageId).numTasks, last.stageInfos.map(i => i.stageId -> i.numTasks))
+  }
+
+  // a few KB of shuffle, far below the advisory partition size: AQE would
+  // coalesce a hash exchange of it to one partition
+  private def tinyGrid = Noise.grid(spark, Noise.NantesLat, Noise.NantesLon, 1000.0, 10)
+
+  private def twoSources = {
     import spark.implicits._
-    // a few KB of shuffle, far below the advisory partition size: AQE would
-    // coalesce a hash exchange of it to one partition
-    val g = Noise.grid(spark, Noise.NantesLat, Noise.NantesLon, 1000.0, 10)
-    val src = Seq((Noise.NantesLat, Noise.NantesLon, 130.0, 300.0),
+    Seq((Noise.NantesLat, Noise.NantesLon, 130.0, 300.0),
       (Noise.NantesLat + 0.05, Noise.NantesLon - 0.05, 90.0, 3000.0))
       .toDF("s_lat", "s_lon", "s_db", "s_alt")
-    val group = "bucketed-parallelism"
-    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val ended = new ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) jobs.add(e)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val out = Noise.groundNoiseBucketed(g, src)
-    try {
-      sc.setJobGroup(group, group)
-      assert(out.collect().nonEmpty)
-    } finally sc.clearJobGroup()
-    eventually(timeout(30.seconds)) {
-      assert(!jobs.isEmpty && jobs.toArray(Array.empty[SparkListenerJobStart])
-        .forall(j => ended.contains(j.jobId)))
-    }
-    sc.removeSparkListener(listener)
+  }
+
+  /** A stream micro-batch's source shape: one payload parsed into state
+    * vectors, a plan the planner cannot size, in one partition.
+    */
+  private def parsedSources = {
+    import spark.implicits._
+    val payload =
+      s"""{"time": 1757059200, "states": [
+         | ["39c4a1", "AFR123  ", "France", 1757059190, 1757059195, ${Noise.NantesLon}, ${Noise.NantesLat},
+         |  310.5, false, 82.3, 184.2, 4.2, null, 335.2, "1000", false, 0],
+         | ["4ca7b3", "RYR45Q  ", "Ireland", 1757059188, 1757059195, -1.65, 47.2,
+         |  null, true, 4.1, 90.0, 0.0, "[1,2]", 27.0, "7000", false, 0]]}""".stripMargin
+        .replace("\n", " ")
+    Noise.classifySource(graft.ingest.OpenSkyParser.parse(Seq(payload).toDS()))
+  }
+
+  test("broadcast ground noise joins and sums in shuffle.partitions tasks on a tiny grid") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val out = Noise.groundNoise(tinyGrid, twoSources)
     // the last job's result stage runs the join, the partial and final sum
-    val last = jobs.toArray(Array.empty[SparkListenerJobStart]).maxBy(_.jobId)
-    val result = last.stageInfos.maxBy(_.stageId)
-    assert(result.numTasks == spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      last.stageInfos.map(i => i.stageId -> i.numTasks))
-    assert(out.schema.map(f => f.name -> f.dataType.typeName) ==
-      Seq("g_lat" -> "double", "g_lon" -> "double", "db" -> "double"))
+    val (tasks, stages) = resultStageTasks(out)
+    assert(tasks == n, stages)
+  }
+
+  test("bucketed ground noise joins and sums in shuffle.partitions tasks on a tiny grid") {
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // sources sized statically (broadcast by the planner), and parsed
+    // sources the planner cannot size, where AQE broadcasts the grid instead
+    Seq("local sources" -> twoSources, "parsed payload" -> parsedSources).foreach { case (shape, src) =>
+      val out = Noise.groundNoiseBucketed(tinyGrid, src)
+      // the last job's result stage runs the join, the partial and final sum
+      val (tasks, stages) = resultStageTasks(out)
+      assert(tasks == n, s"$shape: $stages")
+      assert(out.schema.map(f => f.name -> f.dataType.typeName) ==
+        Seq("g_lat" -> "double", "g_lon" -> "double", "db" -> "double"))
+    }
   }
 
   test("property: the reach window is a superset of the 20 km disc at any latitude and across the antimeridian") {

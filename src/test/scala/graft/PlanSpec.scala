@@ -44,7 +44,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       p.contains("SortMergeJoin"), p)
   }
 
-  test("q19/q20 test the reach window before the haversine; exchange counts unchanged") {
+  test("q19/q20 test the reach window before the haversine; exchange counts pinned") {
     import org.apache.spark.sql.catalyst.expressions.{And, Asin, Expression}
     import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -54,10 +54,12 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
     val window = Set("s_lat_lo", "s_lat_hi", "s_lon_reach")
     // exchanges of the initial plan (the window adds conjuncts and
-    // source-side columns, never a stage); q20's sources are broadcast at
-    // this scale, so its grid-side hash exchange takes the place of the
-    // per-cell sum's
-    Seq("q19_noise_flagship" -> 5, "q20_noise_bucketed" -> 5).foreach { case (q, exchanges) =>
+    // source-side columns, never a stage): the grid generation's broadcast,
+    // the events scan's round-robin, the sources' broadcast, the grid's
+    // exchange by count and the output sort's range exchange; q20 also
+    // partitions its exploded sources by count (below their broadcast at
+    // this scale). The per-cell sum has none of its own
+    Seq("q19_noise_flagship" -> 5, "q20_noise_bucketed" -> 6).foreach { case (q, exchanges) =>
       val plan = queries.Registry.all.find(_.name == q).get.run(spark, dir)
         .queryExecution.executedPlan
       val pairConds = collect(plan) {
@@ -74,26 +76,30 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("q20 hash-partitions the grid by count, and sums per cell without another exchange") {
+  /** The noise kernels' partitioning (`Noise.byCount`): exactly one
+    * REPARTITION_BY_NUM hash exchange with `spark.sql.shuffle.partitions`
+    * partitions on each of `keys` (per input, in order), and no Exchange
+    * between the grid x sources pair join and any per-cell HashAggregate.
+    */
+  private def assertSumsInJoinStage(q: String, keys: Seq[Seq[String]]): Unit = {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    val plan = queries.Registry.all.find(_.name == "q20_noise_bucketed").get.run(spark, dir)
+    val plan = queries.Registry.all.find(_.name == q).get.run(spark, dir)
       .queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.executedPlan
         case p => p
       }
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // AQE neither coalesces nor reads locally a REPARTITION_BY_NUM exchange
-    val byCell = plan.collect {
+    val byCount = plan.collect {
       case ShuffleExchangeExec(h: HashPartitioning, _, REPARTITION_BY_NUM, _) => h
     }
-    assert(byCell.size == 1, plan.treeString)
-    assert(byCell.head.numPartitions == n, plan.treeString)
-    assert(byCell.head.expressions.flatMap(_.references.map(_.name)) == Seq("cell_i", "cell_j"),
-      plan.treeString)
+    assert(byCount.map(_.expressions.flatMap(_.references.map(_.name))).sortBy(_.mkString) ==
+      keys.sortBy(_.mkString), s"$q: ${plan.treeString}")
+    assert(byCount.forall(_.numPartitions == n), s"$q: ${plan.treeString}")
     def reachesPairJoin(p: SparkPlan): Boolean = p match {
       case _: Exchange => false
       case j: BaseJoinExec if j.output.exists(_.name == "s_lat") && j.output.exists(_.name == "g_lat") => true
@@ -102,8 +108,17 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val perCell = plan.collect {
       case a: HashAggregateExec if a.groupingExpressions.exists(_.references.exists(_.name == "g_lat")) => a
     }
-    assert(perCell.nonEmpty, plan.treeString)
-    perCell.foreach(a => assert(reachesPairJoin(a), plan.treeString))
+    assert(perCell.nonEmpty, s"$q: ${plan.treeString}")
+    perCell.foreach(a => assert(reachesPairJoin(a), s"$q: ${plan.treeString}"))
+  }
+
+  test("q19 hash-partitions the grid by count, and sums per cell without another exchange") {
+    assertSumsInJoinStage("q19_noise_flagship", Seq(Seq("g_lat", "g_lon")))
+  }
+
+  test("q20 hash-partitions the grid by count, and sums per cell without another exchange") {
+    // both join inputs: the grid and the exploded sources
+    assertSumsInJoinStage("q20_noise_bucketed", Seq(Seq("cell_i", "cell_j"), Seq("cell_i", "cell_j")))
   }
 
   test("q28 blocked ngram-jaccard avoids nested-loop joins entirely") {

@@ -42,13 +42,21 @@ class SinksAndSkewSpec extends SparkTestBase {
   test("HTML heatmap sink renders cells and legend") {
     val g = noise.Noise.grid(spark, 47.1542, -1.6044, 2000.0, 3)
     val s = queries.NoiseQueries.sources(spark, "/root/testdata/sf0.001")
-    val heat = noise.Noise.heatmapRows(noise.Noise.groundNoise(g, s))
+    // materialized in three partitions, so the write itself runs no shuffle
+    val heat = noise.Noise.heatmapRows(noise.Noise.groundNoise(g, s)).repartition(3).cache()
+    val rows = heat.count()
+    assert(heat.rdd.getNumPartitions == 3)
     val out = tmp("heat") + "/map.html"
-    HeatmapHtml.write(heat, out)
+    // one job reads every partition at once
+    val jobs = jobsOf(HeatmapHtml.write(heat, out))
+    assert(jobs.size == 1, jobs.map(j => j.jobId -> j.stageInfos.map(_.numTasks)))
+    assert(jobs.head.stageInfos.maxBy(_.stageId).numTasks == 3, jobs.head.stageInfos.map(_.numTasks))
     val html = Files.readString(java.nio.file.Paths.get(out))
     assert(html.contains("<div id=map>"))
     assert(html.contains("dB"))
-    assert(html.split("class=c").length > 10) // cells rendered
+    assert(rows > 10)
+    assert("<div class=c ".r.findAllIn(html).size == rows) // one cell per row
+    heat.unpersist()
   }
 
   test("salted join returns exactly the unsalted join's rows under skew") {
