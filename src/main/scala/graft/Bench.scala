@@ -295,7 +295,7 @@ object Bench {
             SparkEntry.queries(k)(spark, sfDir)
               .write.format("noop").mode("overwrite").save()
             (System.nanoTime() - t0) / 1e9
-          } catch { case _: Throwable => -1.0 }
+          } catch { case scala.util.control.NonFatal(_) => -1.0 }
         }
         graft.operators.ScopedCache.drain()
         // rerun-window diag row, appended after the per-pass rows — the

@@ -22,7 +22,7 @@ object Scratch {
     }
     spark.sparkContext.setLogLevel("WARN")
     Tables.names.foreach { n =>
-      try Tables.load(spark, sfDir, n).limit(1).count() catch { case _: Throwable => () }
+      try Tables.load(spark, sfDir, n).limit(1).count() catch { case scala.util.control.NonFatal(_) => () }
     }
     val names = args.toSeq match {
       case Nil => Seq("q19_noise_flagship", "q20_noise_bucketed")

@@ -1,8 +1,9 @@
 package graft.noise
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GeoCells
 import graft.functions.GeoFunctions._
 
 /** The reference pipeline's analytics core, re-expressed as distributed Spark
@@ -25,14 +26,10 @@ import graft.functions.GeoFunctions._
   * side) conjoined BEFORE the 20 km haversine. Catalyst generates conjunctions
   * as short-circuit code, so a pair outside the window costs three comparisons
   * and a `pmod` instead of the haversine's trig. The window is a strict superset
-  * of the 20 km disc, so the output is unchanged:
-  *
-  *   haversine: sin²(d/2R) = sin²(Δφ/2) + cosφ₁·cosφ₂·sin²(Δλ/2), both terms >= 0
-  *   => d <= r implies |Δφ| <= r/R (the latitude band), and with both
-  *      |φ| <= φmax = |s_lat| + r/R, sin(|Δλ|/2) <= sin(r/2R)/cos(φmax), i.e.
-  *      the wrapped longitude gap |pmod(g_lon - s_lon + 180, 360) - 180| is at
-  *      most 2·asin(sin(r/2R)/cos φmax) (the whole circle once
-  *      cos φmax <= sin(r/2R)).
+  * of the 20 km disc, so the output is unchanged: its bounds are the two that
+  * the recall proof of `graft.functions.GeoCells` derives from the haversine,
+  * |Δφ| <= r/R and a wrapped longitude gap |pmod(g_lon - s_lon + 180, 360) -
+  * 180| of at most `GeoCells.lonReach` at φmax = |s_lat| + r/R.
   *
   * Both reaches are widened by (1 + ε), ε = 1e-6 (2 cm at 20 km), which dwarfs
   * the double rounding of the haversine, so a pair the haversine keeps is never
@@ -43,11 +40,9 @@ import graft.functions.GeoFunctions._
   *
   * Scale posture (SURVEY.md §7.5): the source side is broadcast when small.
   * For source cardinality beyond broadcast range, [[groundNoiseBucketed]]
-  * switches to a geo-cell equi-join: both sides get a coarse cell key of size
-  * >= R_MAX, sources explode into their 3x3 neighbor cells, the join becomes
-  * a shuffle hash/sort-merge equi-join on the cell key, and the exact
-  * haversine predicate filters within the bucket. That plan survives 100 TB:
-  * no cross join, no driver materialization, shuffle keyed by geo-cell.
+  * switches to an equi-join on the geo cells of `graft.functions.GeoCells`
+  * (which holds their recall proof): no cross join, no driver
+  * materialization, shuffle keyed by geo-cell.
   *
   * Partitioning: both kernels hash-partition their inputs by an explicit
   * count ([[byCount]]), which AQE's byte-based coalescing leaves at
@@ -130,17 +125,10 @@ object Noise {
   /** Latitude reach r/R of the 20 km cutoff, in degrees, widened by ε. */
   private val LatReachDeg = RMaxM / EarthRadiusM * (180.0 / math.Pi) * (1.0 + ReachEps)
 
-  private val SinHalfReach = math.sin(RMaxM / (2.0 * EarthRadiusM))
+  /** The kernels' geo cells, whose [[GeoCells.lonReach]] the window shares. */
+  private val Cells = GeoCells(RMaxM)
 
-  /** Longitude reach in radians of any within-20-km pair whose latitudes are
-    * both at most `phiMaxDeg` in magnitude: 2·asin(sin(r/2R)/cos φmax), or the
-    * whole circle 2π once cos φmax <= sin(r/2R) (the cap around a pole).
-    */
-  private def lonReach(phiMaxDeg: Column): Column = {
-    val cosMax = cos(radians(phiMaxDeg))
-    when(cosMax <= SinHalfReach, lit(2.0 * math.Pi))
-      .otherwise(asin(lit(SinHalfReach) / cosMax) * 2.0d)
-  }
+  private def expr(name: String) = GraftBridge.expression(col(name))
 
   /** Adds each source's reach window: the latitude band
     * [`s_lat_lo`, `s_lat_hi`] = s_lat ± r/R·(1+ε) and the longitude reach
@@ -152,7 +140,8 @@ object Noise {
       .withColumn("s_lat_lo", col("s_lat") - LatReachDeg)
       .withColumn("s_lat_hi", col("s_lat") + LatReachDeg)
       .withColumn("s_lon_reach",
-        degrees(lonReach(abs(col("s_lat")) + LatReachDeg)) * (1.0 + ReachEps))
+        degrees(GraftBridge.column(Cells.lonReach(GraftBridge.expression(
+          abs(col("s_lat")) + LatReachDeg)))) * (1.0 + ReachEps))
 
   /** `df` hash-partitioned on `cols` into `spark.sql.shuffle.partitions`
     * partitions, as a REPARTITION_BY_NUM exchange. The noise kernels' inputs
@@ -206,35 +195,12 @@ object Noise {
   }
 
   /** Scale-path variant of [[groundNoise]] for source cardinalities beyond
-    * broadcast range (SURVEY.md §7.5): geo-cell bucketing turns the cross
-    * join into an equi-join, valid at EVERY latitude and across the
-    * antimeridian (round 11; the earlier flat floor(lon/c) scheme enforced
-    * |lat| <= 60 with a raise).
-    *
-    * Scheme: latitude BANDS of height cellDeg (>= the 20 km latitude
-    * reach), and per band a longitude RING of `nLon(band)` equal cells
-    * whose width is proven >= the longitude reach of any within-radius
-    * pair touching the band:
-    *
-    *   haversine: sin²(d/2) >= cosφ₁·cosφ₂·sin²(Δλ/2), both |φ| <= φmax
-    *   (the band's |lat| ceiling extended one band for cross-band pairs)
-    *   => |Δλ| <= 2·asin(min(1, sin(r/2R)/cos(φmax))) = the band's reach;
-    *   nLon = max(1, floor(2π / reach)) so each ring cell covers it.
-    *
-    * Ring indices wrap modulo nLon, so antimeridian pairs land in adjacent
-    * cells by construction; near the poles cos(φmax) collapses and the
-    * ring degenerates to ONE cell (the cap joins as a single bucket, which
-    * is also the correct physics — everything there is within a few cells).
-    * Sources explode into the 3 touching bands and, per band, their
-    * `array_distinct` ring-neighbor cells (distinct, so a 1-cell ring
-    * cannot duplicate pairs into the power sum). The join runs on
-    * (band, ring cell) and the [[inRange]] predicate (reach window, then the
-    * exact haversine) filters within buckets; the ring width comes from the
-    * same [[lonReach]] the window uses. Longitudes are wrapped before the
-    * ring index is taken, so grid longitudes past ±180 (a grid centred near
-    * the antimeridian) land in the ring cell of their wrapped position.
-    * Same semantics as [[groundNoise]] on any input with valid latitudes
-    * (|lat| <= 90); no cross join, no raise.
+    * broadcast range (SURVEY.md §7.5): the grid gets its `GeoCells` key, the
+    * sources explode into their neighbour keys, and the join runs on
+    * (cell_i, cell_j), valid at every latitude and across the antimeridian.
+    * The [[inRange]] predicate (reach window, then the exact haversine)
+    * filters within buckets. Same semantics as [[groundNoise]] on any input
+    * with valid latitudes (|lat| <= 90).
     *
     * Partitioning: both sides, the grid and the exploded sources, are
     * hash-partitioned on (cell_i, cell_j) by [[byCount]], so the join keeps
@@ -250,32 +216,14 @@ object Noise {
     * one-task final stage. The cell columns are dropped after.
     */
   def groundNoiseBucketed(gridDf: DataFrame, sources: DataFrame): DataFrame = {
-    // band height in degrees, conservatively >= the latitude reach r/R
-    val cellDeg = RMaxM / EarthRadiusM * (180.0 / math.Pi) * 2.0
-    def band(lat: Column): Column = floor(lat / cellDeg).cast("long")
-    // ring resolution for a band: covers the longitude reach of any pair
-    // whose partner sits in this band or a neighboring one
-    def nLon(b: Column): Column = {
-      val phiMax = least(lit(90.0d),
-        greatest(abs(b * cellDeg), abs((b + lit(1L)) * cellDeg)) + cellDeg)
-      greatest(lit(1L), floor(lit(2.0 * math.Pi) / lonReach(phiMax)).cast("long"))
-    }
-    // ring index of a longitude at resolution n: the longitude is wrapped
-    // into [-180, 180) first; indices are 0..n-1 (the clamp guards rounding
-    // up to n) and wrap modulo n
-    def ringCell(lon: Column, n: Column): Column =
-      least(n - 1L, floor(pmod(lon + 180.0d, lit(360.0d)) / 360.0d * n).cast("long"))
-    val g = gridDf
-      .withColumn("cell_i", band(col("g_lat")))
-      .withColumn("cell_j", ringCell(col("g_lon"), nLon(col("cell_i"))))
+    val (cellI, cellJ) = Cells.key(expr("g_lat"), expr("g_lon"))
+    val g = gridDf.select(col("*"),
+      GraftBridge.column(cellI).as("cell_i"), GraftBridge.column(cellJ).as("cell_j"))
     val s = withReachWindow(sources)
-      .withColumn("di", explode(sequence(lit(-1L), lit(1L))))
-      .withColumn("cell_i", band(col("s_lat")) + col("di"))
-      .withColumn("nl", nLon(col("cell_i")))
-      .withColumn("cell_j", explode(array_distinct(
-        transform(sequence(lit(-1L), lit(1L)),
-          dj => pmod(ringCell(col("s_lon"), col("nl")) + dj, col("nl"))))))
-      .drop("di", "nl")
+      .withColumn("cell_i", explode(GraftBridge.column(Cells.neighbourBands(expr("s_lat")))))
+      .withColumn("nl", GraftBridge.column(Cells.nLon(expr("cell_i"))))
+      .withColumn("cell_j", explode(GraftBridge.column(Cells.neighbourRings(expr("s_lon"), expr("nl")))))
+      .drop("nl")
     byCount(g, "cell_i", "cell_j").join(byCount(s, "cell_i", "cell_j"), Seq("cell_i", "cell_j"))
       .withColumn("dist_m",
         haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.functions.GeoFunctions
+import graft.functions.GeoCells
 
 /** Optimizer rule: rewrite a haversine range predicate over a cross join
   * into a geo-cell-bucketed equi-join.
@@ -17,37 +17,23 @@ import graft.functions.GeoFunctions
   * becomes
   *   Filter(same predicate)
   *     Join(Inner, cell_i = cell_i && cell_j = cell_j)
-  *       Project(L, cell_i = floor(latA/c), cell_j = floor(lonA/c))
-  *       Generate(explode 3x3 neighbor cells of R)
+  *       Project(L, (cell_i, cell_j) = the point's GeoCells(r) key)
+  *       Generate(explode R's GeoCells(r) neighbour keys)
   *
-  * with cell size c = the spherical longitude reach at the latitude guard
-  * (see cellDeg below). The cell only guarantees longitude recall while
-  * cos(lat) >= 1/2, i.e. |lat| <= 60°, and plain floor(lon/c) cells cannot pair across the
-  * antimeridian (the haversine itself wraps via sin²(Δlon/2)). So the
-  * rewrite splits rows by a runtime guard instead of assuming a domain:
+  * on the cells `Noise.groundNoiseBucketed` joins on; `graft.functions.GeoCells`
+  * holds their recall proof. The proof needs valid latitudes, so the rewrite
+  * splits rows by a runtime guard instead of assuming a domain:
   *
   *   bucketed(goodL ⋈ goodR)  ∪  exact(badL × all R)  ∪  exact(goodL × badR)
   *
-  * where good = |lat| <= 60 AND |lon| <= 180 − c. The three branches are
-  * disjoint and cover every pair, the exact haversine predicate applies in
-  * all of them, and rows with null coordinates drop in every branch exactly
-  * as they do in the original filter — semantics are identical at ANY
-  * latitude/longitude. Realistic datasets put almost all rows in the
-  * bucketed branch; the exact branches stay tiny (and degenerate to the
-  * original cross join only if the whole dataset is polar/seam data).
-  * What changes is the physical shape: a hash/sort-merge equi-join shuffled
-  * on the cell key instead of an O(|L| x |R|) nested-loop cross join — the
-  * difference between feasible and not at 100 TB.
-  *
-  * Recall proof for the bucketed branch (c = cellDeg below, the SPHERICAL
-  * bound 2·asin(min(1, 2·sin(r/2R)))): haversine gives
-  * sin²(Δlat/2) <= sin²(r/2R), so |Δlat| <= 2·(r/2R) <= c (asin(x) >= x);
-  * and for both |lat| <= 60, sin(Δlon/2)·cos(60°) <= sin(r/2R), so
-  * |Δlon| <= 2·asin(2·sin(r/2R)) = c exactly. Hence the pair lands in the
-  * same or a neighboring cell on each axis — the planar 2·rDeg is NOT
-  * sufficient here (9.0001° > 8.9932° at r = 500 km, lat 60). No wrapped
-  * pair survives the good-filter: both |lon| <= 180 − c means the wrapped
-  * gap 360 − |Δlon| >= 2c > c, beyond any within-radius pair's reach.
+  * where good = |lat| <= 90. The three branches are disjoint and cover every
+  * pair, the exact haversine predicate applies in all of them, and rows with
+  * a null latitude, which the original filter drops, are in none of them:
+  * semantics are identical at ANY latitude/longitude. Valid data puts every
+  * row in the bucketed branch. What changes is the physical shape: a
+  * hash/sort-merge equi-join shuffled on the cell key instead of an
+  * O(|L| x |R|) nested-loop cross join — the difference between feasible and
+  * not at 100 TB.
   *
   * The haversine cutoff may be one conjunct of a larger condition (e.g.
   * `Noise.groundNoise`'s reach window ANDed before it): the rule finds it
@@ -56,9 +42,8 @@ import graft.functions.GeoFunctions
   * phrasing the cutoff as `r >= haversine(...)` (semantically identical,
   * structurally distinct).
   *
-  * This is the rewrite `Noise.groundNoiseBucketed` performs by hand
-  * (SURVEY.md §7.5), packaged as a `Rule[LogicalPlan]` so ANY naive
-  * cross-join + haversine-cutoff query picks it up. Install via
+  * Packaged as a `Rule[LogicalPlan]`, so ANY naive cross-join +
+  * haversine-cutoff query picks it up. Install via
   * `spark.experimental.extraOptimizations` or the `graft.GraftExtensions`
   * session extension.
   */
@@ -68,11 +53,6 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     * coarse that bucketing stops pruning and the cross join is no worse.
     */
   private val MaxRadiusM = 500000.0
-
-  /** Latitude bound (deg) inside which the spherical cell covers longitude
-    * shrink: cos(60°) = 1/2 matches the 2·sin(r/2R) factor in cellDeg.
-    */
-  private val SafeLatDeg = 60.0
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     // shape 1: Filter above a condition-less cross join
@@ -123,64 +103,39 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   private def rewrite(m: RangeMatch, join: Join): LogicalPlan = {
-    import m.{latA, lonA, latB, lonB, r}
+    import m.{latA, lonA, latB, lonB}
     val (left, right) = (join.left, join.right)
     // orient the pairs to their sides
     val (latL, lonL, latR, lonR) =
       if (left.outputSet.contains(latA)) (latA, lonA, latB, lonB)
       else (latB, lonB, latA, lonA)
+    val cells = GeoCells(m.r)
 
-    // Spherical longitude reach, NOT the planar 2*rDeg: by the haversine,
-    // a within-radius pair at equal latitude phi has
-    //   sin(dLon/2) * cos(phi) <= sin(r/2R),
-    // so at the |phi| <= 60 guard (cos = 1/2) the true bound is
-    //   dLonMax = 2*asin(min(1, 2*sin(r/2R)))
-    // which exceeds 2*rDeg (9.005 deg vs 8.993 deg at r = 500 km). A planar
-    // cell would let a max-radius pair hugging the 60-degree guard straddle
-    // two cell boundaries and silently drop. The spherical bound also covers
-    // latitude (dLatMax = rDeg*2... <= cellDeg since asin(x) >= x) and keeps
-    // the seam argument intact (wrapped gap >= 2*cellDeg when both
-    // |lon| <= 180 - cellDeg).
-    val cellDeg = math.toDegrees(2.0 * math.asin(
-      math.min(1.0, 2.0 * math.sin(r / (2.0 * GeoFunctions.EarthRadiusM)))))
-    def cellOf(a: Attribute): Expression = Floor(Divide(a, Literal(cellDeg)))
-
-    // runtime guard: rows the spherical cell provably covers
-    def isGood(lat: Attribute, lon: Attribute): Expression = And(
-      LessThanOrEqual(Abs(lat), Literal(SafeLatDeg)),
-      LessThanOrEqual(Abs(lon), Literal(180.0 - cellDeg)))
-    def isBad(lat: Attribute, lon: Attribute): Expression = Not(isGood(lat, lon))
+    // runtime guard: rows the cells' recall proof covers
+    def isGood(lat: Attribute): Expression = LessThanOrEqual(Abs(lat), Literal(90.0))
 
     // --- branch 1: bucketed equi-join over the guarded rows ---
-    val lCellI = Alias(cellOf(latL), "__cell_i")()
-    val lCellJ = Alias(cellOf(lonL), "__cell_j")()
-    val goodLeft = Filter(isGood(latL, lonL), left)
-    val newLeft = Project(left.output :+ lCellI :+ lCellJ, goodLeft)
-
-    // right side: explode each guarded row into its 3x3 neighbor cells
-    val rCellIAttr = AttributeReference("__rcell_i", LongType)()
-    val rCellJAttr = AttributeReference("__rcell_j", LongType)()
-    def neighbors(base: Expression): Expression =
-      CreateArray(Seq(-1L, 0L, 1L).map(d => Add(base, Literal(d))))
-    val goodRight = Filter(isGood(latR, lonR), right)
-    val genI = Generate(Explode(neighbors(cellOf(latR))), Nil, outer = false,
-      qualifier = None, generatorOutput = Seq(rCellIAttr), child = goodRight)
-    val genJ = Generate(Explode(neighbors(cellOf(lonR))), Nil, outer = false,
-      qualifier = None, generatorOutput = Seq(rCellJAttr), child = genI)
-
-    val joinCond = And(
-      EqualTo(lCellI.toAttribute, rCellIAttr),
-      EqualTo(lCellJ.toAttribute, rCellJAttr))
+    val (cellI, cellJ) = cells.key(latL, lonL)
+    val lCells = Seq(Alias(cellI, "__cell_i")(), Alias(cellJ, "__cell_j")())
+    val newLeft = Project(left.output ++ lCells, Filter(isGood(latL), left))
+    // right side: explode each guarded row into its neighbour keys
+    val rCells = Seq("__rcell_i", "__rcell_j").map(AttributeReference(_, LongType)())
+    def explode(e: Expression, out: Attribute, child: LogicalPlan) =
+      Generate(Explode(e), Nil, outer = false, qualifier = None, Seq(out), child)
+    val bands = explode(cells.neighbourBands(latR), rCells(0), Filter(isGood(latR), right))
+    val nl = Alias(cells.nLon(rCells(0)), "__nl")()
+    val newRight = explode(cells.neighbourRings(lonR, nl.toAttribute), rCells(1),
+      Project(bands.output :+ nl, bands))
+    val joinCond = lCells.zip(rCells).map { case (l, r) => EqualTo(l.toAttribute, r) }.reduce(And)
     // every branch re-applies the whole condition with the cutoff flipped,
     // so this rule's own output can never re-match shape 1/2 on a later
     // fixpoint pass
     val cond = m.flipped
-
-    val bucketed = Join(newLeft, genJ, Inner, Some(joinCond), JoinHint.NONE)
+    val bucketed = Join(newLeft, newRight, Inner, Some(joinCond), JoinHint.NONE)
     // original predicate still applies inside buckets; drop the helper cols
     val branchBucketed = Project(join.output, Filter(cond, bucketed))
 
-    // --- branches 2+3: exact path for unguarded (polar / seam) rows ---
+    // --- branches 2+3: exact path for rows with an invalid latitude ---
     def exactBranch(l: LogicalPlan, rgt: LogicalPlan): LogicalPlan = {
       val joined = Join(l, rgt, Inner, None, JoinHint.NONE)
       // fresh output aliases: Union children must not share attribute ids
@@ -188,9 +143,8 @@ object BucketedRangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       Project(join.output.map(a => Alias(a, a.name)()),
         Filter(cond, joined))
     }
-    val branchBadLeft = exactBranch(Filter(isBad(latL, lonL), left), right)
-    val branchBadRight = exactBranch(Filter(isGood(latL, lonL), left),
-      Filter(isBad(latR, lonR), right))
+    val branchBadLeft = exactBranch(Filter(Not(isGood(latL)), left), right)
+    val branchBadRight = exactBranch(Filter(isGood(latL), left), Filter(Not(isGood(latR)), right))
 
     Union(Seq(branchBucketed, branchBadLeft, branchBadRight))
   }

@@ -64,24 +64,29 @@ class BucketedRangeJoinRuleSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import graft.functions.GeoFunctions._
     import spark.implicits._
-    // at lat 78°, 20 km of longitude spans ~0.86° — more than the doubled
-    // 0.36° cell, so the pre-fix 3x3 neighborhood lost these pairs; the
-    // seam pair wraps at ±180 where plain lon cells can never match
+    // at lat 78°, 20 km of longitude spans ~0.86° — more than a flat
+    // 0.36° cell, so a flat 3x3 neighborhood loses these pairs; the seam
+    // pair wraps at ±180 where plain lon cells can never match; lat 100°
+    // is 80° over the pole, 1.93 km from (80°, 179.9°) by the haversine but
+    // in band 277 against 222, so only the |lat| <= 90 guard's exact branch
+    // keeps that pair
     val ptsA = Seq(
       (1L, 78.0, 16.00), (2L, 78.0, 100.0),       // polar probe
-      (3L, 0.0, 179.95), (4L, 50.0, 10.0))        // seam probe + control
+      (3L, 0.0, 179.95), (4L, 50.0, 10.0),        // seam probe + control
+      (5L, 100.0, 0.0))                           // invalid latitude
       .toDF("id_a", "g_lat", "g_lon")
     val ptsB = Seq(
       (11L, 78.01, 16.80),                        // 17 km from (1): |Δlon| = 0.8°
       (13L, 0.0, -179.95),                        // 11 km from (3), wrapped
-      (14L, 50.001, 10.001))                      // 0.1 km from (4)
+      (14L, 50.001, 10.001),                      // 0.1 km from (4)
+      (15L, 80.0, 179.9))                         // 1.93 km from (5)
       .toDF("id_b", "s_lat", "s_lon")
     def pairs() = ptsA.crossJoin(ptsB)
       .filter(haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")) <= RMaxM)
       .select("id_a", "id_b")
     val before = pairs().orderBy("id_a", "id_b").collect().toSeq
     assert(before.map(r => (r.getLong(0), r.getLong(1))) ==
-      Seq((1L, 11L), (3L, 13L), (4L, 14L)), before)
+      Seq((1L, 11L), (3L, 13L), (4L, 14L), (5L, 15L)), before)
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ BucketedRangeJoinRule
     try {
@@ -94,17 +99,17 @@ class BucketedRangeJoinRuleSpec extends SparkTestBase {
     }
   }
 
-  test("keeps max-radius pairs hugging the lat-60 guard (spherical cell bound)") {
+  test("keeps a max-radius pair at lat 60 that planar cells would drop") {
     import org.apache.spark.sql.functions._
     import graft.functions.GeoFunctions._
     import spark.implicits._
-    // Both points sit AT the |lat| <= 60 guard, 499.77 km apart — inside the
-    // 500 km MaxRadiusM. Their Δlon = 8.996° exceeds the planar cell
-    // 2·rDeg = 8.9932° but not the spherical bound 9.0002°, and lonA is
-    // planted 0.001° below a planar cell boundary so the pair lands TWO
-    // planar cells apart (floor(8.9922/8.9932)=0, floor(17.9882/8.9932)=2):
-    // the pre-fix 3x3 neighborhood silently dropped it. The spherical cell
-    // keeps them adjacent (cells 0 and 1).
+    // Both points sit at lat 60, 499.77 km apart — inside the 500 km
+    // MaxRadiusM. Their Δlon = 8.996° exceeds the planar cell 2·rDeg =
+    // 8.9932°, and lonA is planted 0.001° below a planar cell boundary, so
+    // flat floor(lon/2·rDeg) cells put the pair TWO cells apart
+    // (floor(8.9922/8.9932)=0, floor(17.9882/8.9932)=2) and a 3x3
+    // neighborhood silently drops it. At r = 500 km, lat 60 is band 6,
+    // whose ring has 24 cells of 15°: the pair sits in ring cells 12 and 13.
     val ptsA = Seq((1L, 60.0, 8.9922)).toDF("id_a", "g_lat", "g_lon")
     val ptsB = Seq((11L, 60.0, 17.9882)).toDF("id_b", "s_lat", "s_lon")
     def pairs() = ptsA.crossJoin(ptsB)

@@ -152,8 +152,9 @@ class NoiseSpec extends SparkTestBase {
     // globe (over-weighting |lat| >= 85, the poles and longitudes near
     // ±180), a `Noise.grid` around them (longitudes past ±180 when centred
     // near the seam) plus points within 1 m of the 20 km edge of every
-    // source. Both kernels must return exactly the rows of the plain cross
-    // join that sends every pair straight to the haversine.
+    // source. Both kernels, and `groundNoise` rewritten by
+    // `BucketedRangeJoinRule`, must return exactly the rows of the plain
+    // cross join that sends every pair straight to the haversine.
     import org.apache.spark.sql.DataFrame
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
@@ -206,9 +207,23 @@ class NoiseSpec extends SparkTestBase {
       val src = sources.toDF("s_lat", "s_lon", "s_db", "s_alt")
       val expected = reference(g, src).orderBy("g_lat", "g_lon").collect()
       assert(expected.nonEmpty, s"case $i has no pair in range")
-      Seq("groundNoise" -> Noise.groundNoise(g, src),
-        "groundNoiseBucketed" -> Noise.groundNoiseBucketed(g, src)).foreach { case (k, df) =>
-        val got = df.orderBy("g_lat", "g_lon").collect()
+      def rewritten(): Array[org.apache.spark.sql.Row] = {
+        spark.experimental.extraOptimizations =
+          spark.experimental.extraOptimizations :+ graft.plans.BucketedRangeJoinRule
+        try {
+          val df = Noise.groundNoise(g, src)
+          assert(df.queryExecution.optimizedPlan.toString.contains("__cell_i"), s"case $i")
+          df.orderBy("g_lat", "g_lon").collect()
+        } finally {
+          spark.experimental.extraOptimizations = spark.experimental.extraOptimizations
+            .filterNot(_ == graft.plans.BucketedRangeJoinRule)
+        }
+      }
+      Seq[(String, () => Array[org.apache.spark.sql.Row])](
+        "groundNoise" -> (() => Noise.groundNoise(g, src).orderBy("g_lat", "g_lon").collect()),
+        "groundNoiseBucketed" -> (() => Noise.groundNoiseBucketed(g, src).orderBy("g_lat", "g_lon").collect()),
+        "groundNoise under BucketedRangeJoinRule" -> (() => rewritten())).foreach { case (k, run) =>
+        val got = run()
         assert(got.sameElements(expected),
           s"case $i ($lat, $lon, $sources) $k: ${got.length} rows, reference ${expected.length}; " +
             s"missing ${expected.diff(got).take(5).toSeq}")
