@@ -163,7 +163,7 @@ object Bench {
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case e: Throwable =>
+      catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         errByName(name) = e.getClass.getSimpleName
       }

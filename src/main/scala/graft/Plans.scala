@@ -17,7 +17,7 @@ object Plans {
         println(s"\n===================== $name =====================")
         try println(fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-        catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+        catch { case scala.util.control.NonFatal(e) => println(s"failed: ${e.getMessage}") }
       }
     }
     spark.stop()

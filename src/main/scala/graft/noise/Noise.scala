@@ -38,18 +38,20 @@ import graft.functions.GeoFunctions._
   * are measured the short way round, as the haversine measures them. The
   * argument needs valid latitudes (|lat| <= 90), where cos φ >= 0.
   *
-  * Scale posture (SURVEY.md §7.5): the source side is broadcast when small.
-  * For source cardinality beyond broadcast range, [[groundNoiseBucketed]]
-  * switches to an equi-join on the geo cells of `graft.functions.GeoCells`
-  * (which holds their recall proof): no cross join, no driver
-  * materialization, shuffle keyed by geo-cell.
+  * Scale posture (SURVEY.md §7.5): both kernels broadcast the sources. The
+  * two differ in one decision: [[groundNoise]] pairs every grid cell with
+  * every source in a nested loop, [[groundNoiseBucketed]] probes on the geo
+  * cells of `graft.functions.GeoCells` (which holds their recall proof).
+  * For source sets too large to broadcast, `graft.plans.BucketedRangeJoinRule`
+  * rewrites [[groundNoise]] into the same cell join without a hint and lets
+  * the planner choose, shuffling both sides on the cell key if it must.
   *
-  * Partitioning: both kernels hash-partition their inputs by an explicit
-  * count ([[byCount]]), which AQE's byte-based coalescing leaves at
-  * `spark.sql.shuffle.partitions` tasks, on the keys the per-cell sum
-  * groups by. The join keeps that partitioning, so the join, the partial and
-  * final sum and whatever consumes the result (`heatmapRows`, a sink) run in
-  * one stage at that parallelism, with no exchange after the join.
+  * Partitioning: both kernels hash-partition the grid on (g_lat, g_lon) by an
+  * explicit count ([[byCount]]), which AQE's byte-based coalescing leaves at
+  * `spark.sql.shuffle.partitions` tasks. The broadcast join keeps that
+  * partitioning, so the join, the partial and final sum on (g_lat, g_lon)
+  * and whatever consumes the result (`heatmapRows`, a sink) run in one stage
+  * at that parallelism, with no exchange after the join.
   */
 object Noise {
 
@@ -143,19 +145,18 @@ object Noise {
         degrees(GraftBridge.column(Cells.lonReach(GraftBridge.expression(
           abs(col("s_lat")) + LatReachDeg)))) * (1.0 + ReachEps))
 
-  /** `df` hash-partitioned on `cols` into `spark.sql.shuffle.partitions`
-    * partitions, as a REPARTITION_BY_NUM exchange. The noise kernels' inputs
-    * are a few MB (a row's cost is its haversines, not its bytes), far below
-    * AQE's advisory partition size, so with
-    * `coalescePartitions.parallelismFirst=false` (see `graft.Session`) AQE
-    * would coalesce a hash exchange the planner inserted to one partition,
-    * or read it locally once it turns the join into a broadcast, and the
-    * join and the sums would run in one task. AQE neither coalesces nor reads
-    * locally an exchange partitioned by an explicit count.
+  /** The grid hash-partitioned on (g_lat, g_lon) into
+    * `spark.sql.shuffle.partitions` partitions, as a REPARTITION_BY_NUM
+    * exchange. The noise kernels' inputs are a few MB (a row's cost is its
+    * haversines, not its bytes), far below AQE's advisory partition size, so
+    * with `coalescePartitions.parallelismFirst=false` (see `graft.Session`)
+    * AQE would coalesce a hash exchange the planner inserted to one
+    * partition, and the join and the sums would run in one task. AQE does
+    * not coalesce an exchange partitioned by an explicit count.
     */
-  private def byCount(df: DataFrame, cols: String*): DataFrame = {
-    val partitions = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    df.repartition(partitions, cols.map(col): _*)
+  private def byCount(gridDf: DataFrame): DataFrame = {
+    val partitions = gridDf.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    gridDf.repartition(partitions, col("g_lat"), col("g_lon"))
   }
 
   /** The in-range predicate both kernels share: the reach window first (cheap
@@ -168,6 +169,18 @@ object Noise {
       lonGap <= col("s_lon_reach") && dist <= RMaxM
   }
 
+  /** The tail both kernels share: each candidate pair's haversine, the
+    * [[inRange]] filter, inverse-square attenuation and the per-cell
+    * power-domain sum on (g_lat, g_lon). Output (g_lat, g_lon, db).
+    */
+  private def perCellDb(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("dist_m", haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")))
+      .filter(inRange(col("dist_m")))
+      .withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
+      .groupBy("g_lat", "g_lon")
+      .agg(dbPowerSum(col("contrib")).as("db"))
+
   /** Ground-level noise estimation (reference functions.py:239-276):
     * grid x sources broadcast join, 20 km haversine cutoff, inverse-square
     * attenuation, per-cell power-domain sum. Output (g_lat, g_lon, db).
@@ -176,63 +189,28 @@ object Noise {
     * physical plan is a BroadcastNestedLoopJoin with the [[inRange]] predicate.
     * The join still visits every grid×source pair, but a pair outside the
     * source's window is rejected before the haversine.
-    *
-    * Partitioning: the grid is hash-partitioned on (g_lat, g_lon) by
-    * [[byCount]] (one shuffle of the grid), and the join keeps the grid's
-    * partitioning, so the partial and final sum on (g_lat, g_lon) need no
-    * exchange: the join, both sums and the consumer of the result run in one
-    * stage of `spark.sql.shuffle.partitions` tasks (an exchange the planner
-    * inserted for the sum would be coalesced by AQE to one task).
     */
-  def groundNoise(gridDf: DataFrame, sources: DataFrame): DataFrame = {
-    val dist = haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon"))
-    byCount(gridDf, "g_lat", "g_lon").crossJoin(broadcast(withReachWindow(sources)))
-      .withColumn("dist_m", dist)
-      .filter(inRange(col("dist_m")))
-      .withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
-      .groupBy("g_lat", "g_lon")
-      .agg(dbPowerSum(col("contrib")).as("db"))
-  }
+  def groundNoise(gridDf: DataFrame, sources: DataFrame): DataFrame =
+    perCellDb(byCount(gridDf).crossJoin(broadcast(withReachWindow(sources))))
 
-  /** Scale-path variant of [[groundNoise]] for source cardinalities beyond
-    * broadcast range (SURVEY.md §7.5): the grid gets its `GeoCells` key, the
-    * sources explode into their neighbour keys, and the join runs on
+  /** [[groundNoise]] with the nested loop replaced by a probe on the geo cell
+    * key (SURVEY.md §7.5): the grid gets its `GeoCells` key above its
+    * (g_lat, g_lon) exchange, the sources explode into their neighbour keys
+    * and are broadcast, and the join is a hash equi-join on
     * (cell_i, cell_j), valid at every latitude and across the antimeridian.
-    * The [[inRange]] predicate (reach window, then the exact haversine)
-    * filters within buckets. Same semantics as [[groundNoise]] on any input
-    * with valid latitudes (|lat| <= 90).
-    *
-    * Partitioning: both sides, the grid and the exploded sources, are
-    * hash-partitioned on (cell_i, cell_j) by [[byCount]], so the join keeps
-    * `spark.sql.shuffle.partitions` tasks whether it stays a sort-merge join
-    * or AQE broadcasts either side at run time. (A micro-batch's sources,
-    * parsed from one JSON payload in one partition, cannot be sized by the
-    * planner, so a small cached grid is broadcast instead; a planner-inserted
-    * exchange of the sources would then be read locally in one task.) The
-    * per-cell sum groups on (cell_i, cell_j, g_lat, g_lon): the cell key is a
-    * function of (g_lat, g_lon), so the groups are those of (g_lat, g_lon),
-    * and the join's output partitioning already clusters them, so the
-    * partial and final sum run in the join's stage with no exchange and no
-    * one-task final stage. The cell columns are dropped after.
+    * A grid cell meets only the sources of its own key. Same semantics as
+    * [[groundNoise]] on any input with valid latitudes (|lat| <= 90).
     */
   def groundNoiseBucketed(gridDf: DataFrame, sources: DataFrame): DataFrame = {
     val (cellI, cellJ) = Cells.key(expr("g_lat"), expr("g_lon"))
-    val g = gridDf.select(col("*"),
+    val g = byCount(gridDf).select(col("*"),
       GraftBridge.column(cellI).as("cell_i"), GraftBridge.column(cellJ).as("cell_j"))
     val s = withReachWindow(sources)
       .withColumn("cell_i", explode(GraftBridge.column(Cells.neighbourBands(expr("s_lat")))))
       .withColumn("nl", GraftBridge.column(Cells.nLon(expr("cell_i"))))
       .withColumn("cell_j", explode(GraftBridge.column(Cells.neighbourRings(expr("s_lon"), expr("nl")))))
       .drop("nl")
-    byCount(g, "cell_i", "cell_j").join(byCount(s, "cell_i", "cell_j"), Seq("cell_i", "cell_j"))
-      .withColumn("dist_m",
-        haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")))
-      .filter(inRange(col("dist_m")))
-      .withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
-      // the same groups as (g_lat, g_lon), clustered like the join's output
-      .groupBy("cell_i", "cell_j", "g_lat", "g_lon")
-      .agg(dbPowerSum(col("contrib")).as("db"))
-      .drop("cell_i", "cell_j")
+    perCellDb(g.join(broadcast(s), Seq("cell_i", "cell_j")))
   }
 
   /** Heatmap sink rows (reference functions.py:290-328): intensity = db/130

@@ -30,10 +30,12 @@ import graft.functions.GeoCells
   * pair, the exact haversine predicate applies in all of them, and rows with
   * a null latitude, which the original filter drops, are in none of them:
   * semantics are identical at ANY latitude/longitude. Valid data puts every
-  * row in the bucketed branch. What changes is the physical shape: a
-  * hash/sort-merge equi-join shuffled on the cell key instead of an
-  * O(|L| x |R|) nested-loop cross join — the difference between feasible and
-  * not at 100 TB.
+  * row in the bucketed branch. What changes is the physical shape: an
+  * equi-join on the cell key instead of an O(|L| x |R|) nested-loop cross
+  * join — the difference between feasible and not at 100 TB. The rewrite
+  * carries no join hint, so the planner picks the join: it broadcasts a
+  * small side, as `Noise.groundNoiseBucketed` always does, and shuffles both
+  * sides on the cell key into a sort-merge join when neither is small.
   *
   * The haversine cutoff may be one conjunct of a larger condition (e.g.
   * `Noise.groundNoise`'s reach window ANDed before it): the rule finds it

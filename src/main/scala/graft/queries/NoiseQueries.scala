@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -24,20 +24,25 @@ object NoiseQueries {
   private val StepM = 500.0
   private val N = 30
 
-  /** Deterministic synthetic aircraft derived from events: positions within
-    * ~±0.1° of the airport, dB per the reference's classification table.
+  /** Deterministic synthetic aircraft derived from an events frame: every
+    * 97th event, positioned within ~±0.1° of the airport, dB per the
+    * reference's classification table. The `keep` columns come first, then
+    * (s_lat, s_lon, s_db, s_alt).
     */
-  def sources(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "events")
+  def sourcesOf(events: DataFrame, keep: Column*): DataFrame =
+    events
       .filter(pmod(col("event_id"), lit(97L)) === 0)
-      .select(
+      .select(keep ++ Seq(
         (lit(Lat0) + (pmod(col("event_id") * 7919L + 13L, lit(4001L)) - 2000L) * 0.00005d).as("s_lat"),
         (lit(Lon0) + (pmod(col("event_id") * 104729L + 7L, lit(4001L)) - 2000L) * 0.00005d).as("s_lon"),
         when(col("event_type") === "error", 110.0d)
           .when(col("event_type") === "signup", 80.0d)
           .when(col("event_type") === "purchase", 130.0d)
           .otherwise(90.0d).as("s_db"),
-        (lit(100.0d) + pmod(col("event_id"), lit(900L)).cast("double")).as("s_alt"))
+        (lit(100.0d) + pmod(col("event_id"), lit(900L)).cast("double")).as("s_alt")): _*)
+
+  /** [[sourcesOf]] the `events` table. */
+  def sources(s: SparkSession, dir: String): DataFrame = sourcesOf(Tables.load(s, dir, "events"))
 
   private[queries] val sourcesSql: String = """
     SELECT 47.1542e0 + (((event_id*7919+13) % 4001) - 2000) * 0.00005e0 AS s_lat,
@@ -174,15 +179,8 @@ object NoiseQueries {
     "q64_noise_timeseries",
     (s, dir) => {
       import graft.functions.GeoFunctions._
-      Tables.load(s, dir, "events")
-        .filter(pmod(col("event_id"), lit(97L)) === 0)
-        .select(expr("(unix_micros(ts) DIV 86400000000) * 86400000000").as("day_us"),
-          (lit(Lat0) + (pmod(col("event_id") * 7919L + 13L, lit(4001L)) - 2000L) * 0.00005d).as("s_lat"),
-          (lit(Lon0) + (pmod(col("event_id") * 104729L + 7L, lit(4001L)) - 2000L) * 0.00005d).as("s_lon"),
-          when(col("event_type") === "error", 110.0d)
-            .when(col("event_type") === "signup", 80.0d)
-            .when(col("event_type") === "purchase", 130.0d)
-            .otherwise(90.0d).as("s_db"))
+      sourcesOf(Tables.load(s, dir, "events"),
+          expr("(unix_micros(ts) DIV 86400000000) * 86400000000").as("day_us"))
         .withColumn("dist_m",
           haversineMeters(lit(Lat0), lit(Lon0), col("s_lat"), col("s_lon")))
         .filter(col("dist_m") <= RMaxM)

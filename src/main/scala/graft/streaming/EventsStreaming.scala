@@ -382,30 +382,17 @@ object EventsStreaming {
   }
 
   /** Streaming ground-noise estimation: the flagship pipeline over a live
-    * feed. Events classify into noise sources (same derivation as
-    * NoiseQueries.sources), stream-static join against the precomputed
-    * ground grid (the static side broadcasts — no state), then a
-    * watermarked tumbling window aggregates the power-domain sum per cell
-    * per window. This is the reference's batch snapshot loop (reference
-    * functions.py:279-330 runs once per invocation) turned into a
-    * continuous query.
+    * feed. Events classify into noise sources (`NoiseQueries.sourcesOf`),
+    * stream-static join against the precomputed ground grid (the static
+    * side broadcasts — no state), then a watermarked tumbling window
+    * aggregates the power-domain sum per cell per window. This is the
+    * reference's batch snapshot loop (reference functions.py:279-330 runs
+    * once per invocation) turned into a continuous query.
     */
   def streamingNoise(staticGrid: DataFrame, events: DataFrame,
                      windowLen: String = "5 minutes"): DataFrame = {
     import graft.functions.GeoFunctions._
-    val sources = events
-      .withWatermark("ts", "10 minutes")
-      .filter(pmod(col("event_id"), lit(97L)) === 0)
-      .select(col("ts"),
-        (lit(graft.noise.Noise.NantesLat) +
-          (pmod(col("event_id") * 7919L + 13L, lit(4001L)) - 2000L) * 0.00005d).as("s_lat"),
-        (lit(graft.noise.Noise.NantesLon) +
-          (pmod(col("event_id") * 104729L + 7L, lit(4001L)) - 2000L) * 0.00005d).as("s_lon"),
-        when(col("event_type") === "error", 110.0d)
-          .when(col("event_type") === "signup", 80.0d)
-          .when(col("event_type") === "purchase", 130.0d)
-          .otherwise(90.0d).as("s_db"))
-    sources
+    graft.queries.NoiseQueries.sourcesOf(events.withWatermark("ts", "10 minutes"), col("ts"))
       .join(broadcast(staticGrid)) // stream-static cross join, grid broadcast
       .withColumn("dist_m",
         haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")))

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 import graft.noise.Noise
 import graft.plans.BucketedRangeJoinRule
 
@@ -7,7 +9,7 @@ import graft.plans.BucketedRangeJoinRule
   * bucketed equi-join — identical results, no quadratic join between grid
   * and sources.
   */
-class BucketedRangeJoinRuleSpec extends SparkTestBase {
+class BucketedRangeJoinRuleSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def naiveNoise() = Noise.groundNoise(
     Noise.grid(spark, Noise.NantesLat, Noise.NantesLon, 1000.0, 10),
@@ -27,6 +29,31 @@ class BucketedRangeJoinRuleSpec extends SparkTestBase {
       val phys = df.queryExecution.executedPlan.toString
       assert(phys.contains("__cell_i"), phys)
     } finally {
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations.filterNot(_ == BucketedRangeJoinRule)
+    }
+  }
+
+  test("with broadcasts off, the rewrite shuffles both sides into a sort-merge join on the cell key") {
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    // the rewrite carries no join hint: a source set too large to broadcast
+    // takes the shuffled cell join, the one shuffled path of the noise job
+    val before = naiveNoise().orderBy("g_lat", "g_lon").collect()
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ BucketedRangeJoinRule
+    try {
+      val df = naiveNoise().orderBy("g_lat", "g_lon")
+      assert(df.collect().sameElements(before))
+      val plan = df.queryExecution.executedPlan
+      val keys = collect(plan) { case j: SortMergeJoinExec =>
+        (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+      }
+      assert(keys == Seq(Seq("__cell_i", "__cell_j", "__rcell_i", "__rcell_j")), plan.treeString)
+    } finally {
+      spark.conf.set(threshold, prior)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == BucketedRangeJoinRule)
     }

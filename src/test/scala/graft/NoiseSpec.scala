@@ -135,8 +135,8 @@ class NoiseSpec extends SparkTestBase {
 
   test("bucketed ground noise joins and sums in shuffle.partitions tasks on a tiny grid") {
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // sources sized statically (broadcast by the planner), and parsed
-    // sources the planner cannot size, where AQE broadcasts the grid instead
+    // sources sized statically, and parsed sources the planner cannot size:
+    // both are broadcast onto the grid's partitioning by count
     Seq("local sources" -> twoSources, "parsed payload" -> parsedSources).foreach { case (shape, src) =>
       val out = Noise.groundNoiseBucketed(tinyGrid, src)
       // the last job's result stage runs the join, the partial and final sum

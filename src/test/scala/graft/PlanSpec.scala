@@ -56,10 +56,9 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // exchanges of the initial plan (the window adds conjuncts and
     // source-side columns, never a stage): the grid generation's broadcast,
     // the events scan's round-robin, the sources' broadcast, the grid's
-    // exchange by count and the output sort's range exchange; q20 also
-    // partitions its exploded sources by count (below their broadcast at
-    // this scale). The per-cell sum has none of its own
-    Seq("q19_noise_flagship" -> 5, "q20_noise_bucketed" -> 6).foreach { case (q, exchanges) =>
+    // exchange by count and the output sort's range exchange. The per-cell
+    // sum has none of its own
+    Seq("q19_noise_flagship" -> 5, "q20_noise_bucketed" -> 5).foreach { case (q, exchanges) =>
       val plan = queries.Registry.all.find(_.name == q).get.run(spark, dir)
         .queryExecution.executedPlan
       val pairConds = collect(plan) {
@@ -76,17 +75,17 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
-  /** The noise kernels' partitioning (`Noise.byCount`): exactly one
-    * REPARTITION_BY_NUM hash exchange with `spark.sql.shuffle.partitions`
-    * partitions on each of `keys` (per input, in order), and no Exchange
-    * between the grid x sources pair join and any per-cell HashAggregate.
+  /** The noise kernels' partitioning (`Noise.byCount`): the plan's only
+    * hash exchanges are one REPARTITION_BY_NUM exchange with
+    * `spark.sql.shuffle.partitions` partitions on each of `keys` (per input,
+    * in order), and no Exchange lies between the grid x sources pair join
+    * and any per-cell HashAggregate. Returns the final plan.
     */
-  private def assertSumsInJoinStage(q: String, keys: Seq[Seq[String]]): Unit = {
+  private def assertSumsInJoinStage(q: String, keys: Seq[Seq[String]]): SparkPlan = {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
     val plan = queries.Registry.all.find(_.name == q).get.run(spark, dir)
       .queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -94,15 +93,16 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       }
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // AQE neither coalesces nor reads locally a REPARTITION_BY_NUM exchange
-    val byCount = plan.collect {
-      case ShuffleExchangeExec(h: HashPartitioning, _, REPARTITION_BY_NUM, _) => h
+    val hashed = plan.collect {
+      case e @ ShuffleExchangeExec(h: HashPartitioning, _, _, _) => (h, e.shuffleOrigin)
     }
-    assert(byCount.map(_.expressions.flatMap(_.references.map(_.name))).sortBy(_.mkString) ==
+    assert(hashed.map(_._1.expressions.flatMap(_.references.map(_.name))).sortBy(_.mkString) ==
       keys.sortBy(_.mkString), s"$q: ${plan.treeString}")
-    assert(byCount.forall(_.numPartitions == n), s"$q: ${plan.treeString}")
+    assert(hashed.forall { case (h, origin) => origin == REPARTITION_BY_NUM && h.numPartitions == n },
+      s"$q: ${plan.treeString}")
     def reachesPairJoin(p: SparkPlan): Boolean = p match {
       case _: Exchange => false
-      case j: BaseJoinExec if j.output.exists(_.name == "s_lat") && j.output.exists(_.name == "g_lat") => true
+      case j if pairJoin.isDefinedAt(j) => true
       case other => other.children.exists(reachesPairJoin)
     }
     val perCell = plan.collect {
@@ -110,6 +110,13 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
     assert(perCell.nonEmpty, s"$q: ${plan.treeString}")
     perCell.foreach(a => assert(reachesPairJoin(a), s"$q: ${plan.treeString}"))
+    plan
+  }
+
+  /** The grid x sources pair join. */
+  private val pairJoin: PartialFunction[SparkPlan, SparkPlan] = {
+    case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+        if j.output.exists(_.name == "s_lat") && j.output.exists(_.name == "g_lat") => j
   }
 
   test("q19 hash-partitions the grid by count, and sums per cell without another exchange") {
@@ -117,8 +124,14 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("q20 hash-partitions the grid by count, and sums per cell without another exchange") {
-    // both join inputs: the grid and the exploded sources
-    assertSumsInJoinStage("q20_noise_bucketed", Seq(Seq("cell_i", "cell_j"), Seq("cell_i", "cell_j")))
+    import org.apache.spark.sql.execution.joins.HashJoin
+    val plan = assertSumsInJoinStage("q20_noise_bucketed", Seq(Seq("g_lat", "g_lon")))
+    // the sources are broadcast onto the grid's partitioning; the pair join
+    // probes on the cell key
+    val keys = plan.collect(pairJoin).collect { case j: HashJoin =>
+      (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+    }
+    assert(keys == Seq(Seq("cell_i", "cell_j", "cell_i", "cell_j")), plan.treeString)
   }
 
   test("q28 blocked ngram-jaccard avoids nested-loop joins entirely") {
