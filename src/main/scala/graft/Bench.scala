@@ -1,42 +1,30 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query wall seconds
   * (median of SPARK_GRAFT_BENCH_REPEATS in-process runs, default 3).
+  * Every bench main times a query through [[time]].
   *
-  * Results are written to the `noop` sink — a plain count() would let
-  * Catalyst prune the output projections and under-measure expression-heavy
-  * queries; noop forces full evaluation of every output column without any
-  * I/O cost.
-  *
-  * TIERS (SPARK_GRAFT_BENCH_TIER): the DEFAULT tier `full` measures every
-  * query with the median of `repeats` runs, and (since round 13) takes
-  * those repeats INTERLEAVED — the whole surface runs in `repeats`
-  * round-robin passes and each query's median is taken ACROSS passes.
-  * Back-to-back repeats share whatever co-tenant slow window they land in,
-  * which is exactly why a median of 3 consecutive runs still shipped 24
-  * phantom movers in round 12 (all adjudicated ambient: flat gcSec,
-  * loadavg 7-29); with passes separated by the full surface (~4-5 min), a
-  * 10-minute contention window inflates at most ONE sample per query and
-  * the median sheds it. Since round 14 each pass additionally runs in a
-  * deterministically SHUFFLED order (seed = pass index): periodic passes
-  * re-exposed the same queries to any window longer than ~2 pass periods
-  * (round 13's movers were one contiguous id block), while per-pass
-  * permutations turn such a window into isolated single-sample noise. `mixed` is the opt-in dev tier: every query still
-  * runs (the map stays real) but only a pinned subset — the previous
-  * round's movers plus the slowest-by-previous-medians — gets back-to-back
-  * repeats, the rest get one run each. `sequential` restores the pre-r13
-  * full behavior (back-to-back median-of-3 everywhere) for A/B-ing the
-  * interleaving itself.
+  * The repeats are INTERLEAVED: the whole surface runs in `repeats` passes
+  * and each query's median is taken ACROSS passes. Back-to-back repeats
+  * share whatever co-tenant slow window they land in, which is exactly why
+  * a median of 3 consecutive runs still shipped 24 phantom movers in round
+  * 12 (all adjudicated ambient: flat gcSec, loadavg 7-29); with passes
+  * separated by the full surface (~4-5 min), a 10-minute contention window
+  * inflates at most ONE sample per query and the median sheds it. Each pass
+  * runs in a deterministically SHUFFLED order (seed = pass index): periodic
+  * passes re-exposed the same queries to any window longer than ~2 pass
+  * periods (round 13's movers were one contiguous id block), while per-pass
+  * permutations turn such a window into isolated single-sample noise.
   *
   * DIAGNOSTICS: each RUN appends [heapMB, gcSec, storageMB, loadavg,
-  * scopedPending] to the side-channel file (one snapshot per pass under
-  * the interleaved tier) — the round-11 verdict's ask:
+  * scopedPending] to the side-channel file (one snapshot per pass) — the
+  * round-11 verdict's ask:
   * if a slow window correlates with heap/cache residency the code owns it;
   * if it correlates with loadavg alone it is co-tenant contention. After
-  * each query's repeats, [[graft.operators.ScopedCache.drain]] zeroes
+  * each query's run, [[graft.operators.ScopedCache.drain]] zeroes
   * cross-query cache residency (within-query warmth is already spent).
   * For flagged movers, the compact STDOUT line additionally carries
   * `"mdiag"`: per-pass `[gcSec, loadavg]` rows plus one final row for the
@@ -45,16 +33,28 @@ import org.apache.spark.sql.SparkSession
   * (or refutes) a contention substitution without out-of-band sweeps.
   */
 object Bench {
+
+  /** Builds `df` and writes its whole output to the `noop` sink; returns the
+    * wall seconds of both and the output's row count. A `count()` would let
+    * Catalyst prune the output projections and under-measure expression-heavy
+    * plans; noop evaluates every output column without any I/O cost. The row
+    * count is observed on the same job, not by a second one.
+    */
+  def time(df: => DataFrame): (Double, Long) = {
+    val obs = new Observation()
+    val t0 = System.nanoTime()
+    operators.Observe.withQualityMetrics(df, obs, Nil, Nil)
+      .write.format("noop").mode("overwrite").save()
+    val sec = (System.nanoTime() - t0) / 1e9
+    (sec, obs.get("n_rows").asInstanceOf[Long])
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warm file indexes / parquet footers so the alphabetically-first query
-    // doesn't absorb session-init cost in its measurement.
-    Tables.names.foreach { n =>
-      try Tables.load(spark, sfDir, n).limit(1).count()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+    // so the first query in the order doesn't absorb session-init cost
+    Tables.warm(spark, sfDir)
     // Per-query MEDIAN of `repeats` in-process runs: single-shot numbers on
     // this class of VM swing +-50% run-to-run (observed 200-454 s totals for
     // identical code; a 1.9->14 s phantom regression got audited in round
@@ -62,7 +62,6 @@ object Bench {
     // one-off JIT/GC/IO spikes. The median of 3 does that at +2 runs per
     // query; the reported total is the sum of medians.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
-    val tier = sys.env.getOrElse("SPARK_GRAFT_BENCH_TIER", "full")
     // A failing query must be VISIBLE in the output, not a near-zero "fast
     // pass": failures are reported in an errors list and excluded from the
     // per-query map and the total.
@@ -72,8 +71,8 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val allQueries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-    // Previous medians, loaded BEFORE the sweep (they pick the pinned
-    // subset AND feed mover detection afterwards). Two sources, in order:
+    // Previous medians, loaded BEFORE the sweep (they feed mover detection
+    // afterwards). Two sources, in order:
     // this JVM tree's own last side-channel file, then the COMMITTED
     // per-round snapshot (bench_prev.json, refreshed at each round close)
     // — so the driver's fresh-target round run still sees the previous
@@ -83,50 +82,22 @@ object Bench {
     // it would blind the mover detection for every query the restricted
     // run skipped. The same-sf check compares the DIRECTORY string, so a
     // sf0.001 dev side-channel never seeds a sf0.1 driver sweep.
-    val prevSources = Seq(
+    val prev = Seq(
       java.nio.file.Paths.get("target", "bench_full.json"),
       java.nio.file.Paths.get("bench_prev.json")).view.map { p =>
       try {
-        if (java.nio.file.Files.exists(p)) {
-          val txt = new String(java.nio.file.Files.readAllBytes(p),
-            java.nio.charset.StandardCharsets.UTF_8)
-          val sfOk = """"sf"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt)
-            .exists(_.group(1) == sfDir)
-          if (sfOk) {
-            val qs = """"(q[0-9][^"]*)"\s*:\s*([0-9.]+)""".r
-              .findAllMatchIn(txt)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-            // compressed names from the prior "moved" pairs — these keep
-            // their repeat budget this round so a flagged query's next
-            // number is a median again, not a one-shot
-            val mv = """"moved"\s*:\s*\{([^}]*)\}""".r.findFirstMatchIn(txt)
-              .map(_.group(1)).getOrElse("")
-            val movedNames = """"(q[0-9]+)"""".r.findAllMatchIn(mv)
-              .map(_.group(1)).toSet
-            (qs, movedNames)
-          } else (Map.empty[String, Double], Set.empty[String])
-        } else (Map.empty[String, Double], Set.empty[String])
+        val txt = new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8)
+        val sfOk = """"sf"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt)
+          .exists(_.group(1) == sfDir)
+        if (!sfOk) Map.empty[String, Double]
+        else """"(q[0-9][^"]*)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } catch {
-        case scala.util.control.NonFatal(_) =>
-          (Map.empty[String, Double], Set.empty[String])
+        // a missing or unreadable file is no source
+        case scala.util.control.NonFatal(_) => Map.empty[String, Double]
       }
-    }.find(_._1.size * 2 >= allQueries.size.max(1))
-      .getOrElse((Map.empty[String, Double], Set.empty[String]))
-    val (prev, prevMoved) = prevSources
-    // Pinned subset for the mixed tier: previous movers + the 24 slowest
-    // by previous medians + the flagship. Deterministic given the
-    // committed snapshot, so the subset is stable across a round.
-    val pinned: Set[String] =
-      if (tier != "mixed") allQueries.map(_._1).toSet
-      else {
-        // ties broken by name so the subset is fully deterministic given
-        // the committed snapshot (hash-map iteration order is not)
-        val slowest = prev.toSeq.sortBy { case (n, m) => (-m, n) }
-          .take(24).map(_._1)
-        val fromMoved = allQueries.map(_._1)
-          .filter(n => prevMoved.contains(n.takeWhile(_ != '_')))
-        (slowest ++ fromMoved).toSet + "q19_noise_flagship"
-      }
+    }.find(_.size * 2 >= allQueries.size.max(1)).getOrElse(Map.empty)
     def gcMillis(): Long = {
       val it = java.lang.management.ManagementFactory
         .getGarbageCollectorMXBeans.iterator()
@@ -142,7 +113,7 @@ object Bench {
       try spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / (1 << 20)
       catch { case scala.util.control.NonFatal(_) => -1L }
     // name -> one "[heapMB, gcSec, storageMB, loadavg, scopedPending]"
-    // snapshot PER RUN (interleaved: per pass), so a slow sample is
+    // snapshot PER RUN (one per pass), so a slow sample is
     // attributable to its own window, not smeared across repeats
     val diag = scala.collection.mutable.LinkedHashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[String]]
@@ -158,16 +129,13 @@ object Bench {
       allQueries.map(q => q._1 ->
         scala.collection.mutable.ArrayBuffer.empty[Double]): _*)
     val errByName = scala.collection.mutable.Map.empty[String, String]
-    def runOnce(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
+    def runOnce(name: String, fn: (SparkSession, String) => DataFrame): Unit = {
       val gc0 = gcMillis()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
+      try timesByName(name) += time(fn(spark, sfDir))._1
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         errByName(name) = e.getClass.getSimpleName
       }
-      timesByName(name) += (System.nanoTime() - t0) / 1e9
       // diagnostics SNAPSHOT before the drain (residency as the query left
       // it), drain AFTER (the next query starts from a clean cache slate)
       val rt = Runtime.getRuntime
@@ -196,39 +164,15 @@ object Bench {
       // columns are the tool: a mover whose gcSec ~ its excess is GC
       // debt; one with flat gc/heap and elevated loadavg is co-tenant.
     }
-    if (tier == "mixed" || tier == "sequential") {
-      // back-to-back repeats per query; a failed run fails the query and
-      // is never re-run
-      allQueries.foreach { case (name, fn) =>
-        val reps = if (pinned(name)) repeats else 1
-        var i = 0
-        while (i < reps && !errByName.contains(name)) { runOnce(name, fn); i += 1 }
-      }
-    } else {
-      // INTERLEAVED (default, `full`): `repeats` round-robin passes over
-      // the whole surface. The samples a query's median sees are now
-      // separated by a full pass (~minutes), so one co-tenant contention
-      // window can inflate at most one of them. Pass 1 additionally
-      // absorbs all JIT warmup, leaving passes 2+ as clean steady-state
-      // samples — with repeats=3 the median lands on a warm sample
-      // whenever at least two passes are clean.
-      // Each pass runs in a DETERMINISTICALLY SHUFFLED order (seeded by
-      // the pass index): round-robin passes are PERIODIC, so a co-tenant
-      // window longer than ~2 pass periods used to hit the SAME queries
-      // in every pass — the round-13 driver sweep's 24 movers were one
-      // contiguous id block (q71–q91) for exactly this reason. With a
-      // fresh permutation per pass, a long window inflates a DIFFERENT
-      // subset each pass and the per-query median sheds it as isolated
-      // single-sample noise.
-      var pass = 0
-      while (pass < repeats) {
-        val order = new scala.util.Random(0x5DEECE66DL * (pass + 1))
-          .shuffle(allQueries)
-        order.foreach { case (name, fn) =>
+    // Interleaved, shuffled passes (see above). Pass 1 additionally absorbs
+    // all JIT warmup, leaving passes 2+ as clean steady-state samples — with
+    // repeats=3 the median lands on a warm sample whenever at least two
+    // passes are clean. A failed query is not re-run.
+    (0 until repeats).foreach { pass =>
+      new scala.util.Random(0x5DEECE66DL * (pass + 1)).shuffle(allQueries)
+        .foreach { case (name, fn) =>
           if (!errByName.contains(name)) runOnce(name, fn)
         }
-        pass += 1
-      }
     }
     val results = allQueries.map { case (name, _) =>
       val times = timesByName(name)
@@ -290,12 +234,8 @@ object Bench {
       .sortBy(-_._2).take(12).map { case (k, v) =>
         val gc0 = gcMillis()
         val runs = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          try {
-            SparkEntry.queries(k)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch { case scala.util.control.NonFatal(_) => -1.0 }
+          try time(SparkEntry.queries(k)(spark, sfDir))._1
+          catch { case scala.util.control.NonFatal(_) => -1.0 }
         }
         graft.operators.ScopedCache.drain()
         // rerun-window diag row, appended after the per-pass rows — the
@@ -323,7 +263,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
       s""""n_queries":${ok.size},"mean_per_query":${fmt(mean)},""" +
-      s""""repeats":$repeats,"tier":"$tier","pinned":${pinned.size},""" +
+      s""""repeats":$repeats,"tier":"full","pinned":${allQueries.size},""" +
       s""""errors":$errs,"movers":${movers.size},""" +
       s""""moved":$movedJson,"mdiag":$mdiagJson,""" +
       s""""sf":"$sfDir","queries":{"""
@@ -361,7 +301,7 @@ object Bench {
         .map { case (k, v) => s""""$k":${v.mkString("[", ",", "]")}""" }
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""n_queries":${ok.size},"mean_per_query":${fmt(mean)},""" +
-        s""""repeats":$repeats,"tier":"$tier","pinned":${pinned.size},""" +
+        s""""repeats":$repeats,"tier":"full","pinned":${allQueries.size},""" +
         s""""sf":"$sfDir","moved":$movedJson,"queries":{""" +
         entries.mkString(",") + """},"diag":{""" +
         diagEntries.mkString(",") + "}}"

@@ -42,10 +42,12 @@ object CorpusScaleBench {
       .cache()
     val nCorpus = corpus.count()
 
+    // Every DataFrame below is timed through Bench.time. The index writes and
+    // appends are not DataFrames, and the recall probes collect the hit count
+    // they report, so those keep their own clock.
     def time(label: String)(df: => org.apache.spark.sql.DataFrame): (String, Double, Long) = {
-      val t0 = System.nanoTime()
-      val rows = df.count()
-      (label, (System.nanoTime() - t0) / 1e9, rows)
+      val (sec, rows) = Bench.time(df)
+      (label, sec, rows)
     }
 
     val results = Seq(
@@ -190,10 +192,8 @@ object CorpusScaleBench {
       // 4 banded rows per indexed doc
       val indexedDocs = spark.table("csb_sim64_index").count() / 4
       val delta = sim64All.filter(col("doc_id") % replicas === r)
-      val t0 = System.nanoTime()
-      val pairRows = operators.Dedup.probeSim64Index(delta, maxHamming = 3,
-        indexTable = "csb_sim64_index").count()
-      val probeSec = (System.nanoTime() - t0) / 1e9
+      val (probeSec, pairRows) = Bench.time(operators.Dedup.probeSim64Index(
+        delta, maxHamming = 3, indexTable = "csb_sim64_index"))
       val tApp = System.nanoTime()
       operators.Dedup.appendSim64Index(delta, indexTable = "csb_sim64_index")
       val appendSec = (System.nanoTime() - tApp) / 1e9
@@ -245,9 +245,7 @@ object CorpusScaleBench {
       // ONE brute pass: the timed materialization IS the ground truth
       val truth = operators.Similarity.topKBruteL2(embCorpus, nQ, topK)
         .select(col("q_id"), col("vec_id")).cache()
-      val tBrute = System.nanoTime()
-      truth.count()
-      val bruteSec = (System.nanoTime() - tBrute) / 1e9
+      val bruteSec = Bench.time(truth)._1
       // NOTE: each kClusters' FIRST run also pays its (cached) Lloyd fit;
       // the fit is shared across same-k settings via KMeans' fit
       // memoization, so later deltas at that k are pure probe cost.
@@ -292,12 +290,9 @@ object CorpusScaleBench {
       val target = 512
       val kDerived = math.max(4L, (nV + target - 1) / target)
       val obs = new org.apache.spark.sql.Observation("semdedup_caps")
-      val t0 = System.nanoTime()
-      val out = operators.Similarity.semanticDedup(embCorpus,
+      val (sec, keptRows) = Bench.time(operators.Similarity.semanticDedup(embCorpus,
         targetClusterSize = target, maxDominators = 4096, threshold = 0.35,
-        drops = Some(obs))
-      val keptRows = out.filter(col("kept") === 1).count()
-      val sec = (System.nanoTime() - t0) / 1e9
+        drops = Some(obs)).filter(col("kept") === 1))
       val m = obs.get
       embCorpus.unpersist()
       (nV, kDerived, keptRows, sec,
@@ -345,11 +340,9 @@ object CorpusScaleBench {
       val annBuildSec = (System.nanoTime() - tB) / 1e9
       val steps = (0 until nIngest).map { j =>
         val indexedVecs = spark.table("csb_ann_vecs").count()
-        val t0 = System.nanoTime()
-        val rowsOut = operators.Similarity.probePqIndex(spark, nQ, topK,
-          radius = 4, codesTable = "csb_ann_codes", vecTable = "csb_ann_vecs")
-          .count()
-        val probeSec = (System.nanoTime() - t0) / 1e9
+        val (probeSec, rowsOut) = Bench.time(operators.Similarity.probePqIndex(
+          spark, nQ, topK, radius = 4,
+          codesTable = "csb_ann_codes", vecTable = "csb_ann_vecs"))
         val lo = histCut + j.toLong * nBaseVecs
         val delta = embCorpus.filter(col("vec_id") >= lo &&
           col("vec_id") < lo + nBaseVecs)

@@ -49,10 +49,12 @@ object GraphScaleBench {
         : (String, Long, Double, Int, Long, Long) = {
       val l = new PeakListener
       spark.sparkContext.addSparkListener(l)
-      val t0 = System.nanoTime()
-      val (labels, rounds) = operators.Graph.connectedComponents(edges)
-      val nLabels = labels.count()
-      val sec = (System.nanoTime() - t0) / 1e9
+      var rounds = 0
+      val (sec, nLabels) = Bench.time {
+        val (labels, r) = operators.Graph.connectedComponents(edges)
+        rounds = r
+        labels
+      }
       spark.sparkContext.removeSparkListener(l)
       val e = edges.count()
       (label, e, sec, rounds, nLabels, l.peak.get())

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.{count, lit}
-
 /** Benchmark at the REFERENCE's own demo scale (reference
   * scripts/functions.py:281: genCoords(Nantes, 200, 500) → 1,002,001 grid
   * cells, dense |grid|x|sources| haversine matrix in driver NumPy).
@@ -28,24 +26,13 @@ object RefScaleBench {
     val sources = queries.NoiseQueries.sources(spark, sfDir).cache()
     val nSources = sources.count()
 
-    // Writes the kernel's whole output to the noop sink: a `count()` would let
-    // column pruning drop the attenuation and the power sum from the plan.
-    // The row count is observed on that same job.
-    def time(label: String)(df: => org.apache.spark.sql.DataFrame): (String, Double, Long) = {
-      val obs = new org.apache.spark.sql.Observation(label)
-      val t0 = System.nanoTime()
-      df.observe(obs, count(lit(1)).as("rows")).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      (label, sec, obs.get("rows").asInstanceOf[Long])
-    }
-
-    val broadcastRun = time("broadcast")(noise.Noise.groundNoise(grid, sources))
-    val bucketedRun = time("bucketed")(noise.Noise.groundNoiseBucketed(grid, sources))
+    val broadcast = Bench.time(noise.Noise.groundNoise(grid, sources))
+    val bucketed = Bench.time(noise.Noise.groundNoiseBucketed(grid, sources))
     // same naive query, bucketed automatically by the optimizer rule
     GraftExtensions.installInto(spark)
-    val ruleRun = time("rule_rewritten")(noise.Noise.groundNoise(grid, sources))
-    val results = Seq(broadcastRun, bucketedRun, ruleRun)
-    val qs = results.map { case (k, v, n) => s""""$k":{"sec":$v,"rows":$n}""" }.mkString("{", ",", "}")
+    val ruleRewritten = Bench.time(noise.Noise.groundNoise(grid, sources))
+    val qs = Seq("broadcast" -> broadcast, "bucketed" -> bucketed, "rule_rewritten" -> ruleRewritten)
+      .map { case (k, (v, n)) => s""""$k":{"sec":$v,"rows":$n}""" }.mkString("{", ",", "}")
     println(s"""{"metric":"refscale_noise","grid_cells":1002001,"sources":$nSources,"variants":$qs,"sf":"$sfDir","cpus":$cpus}""")
     spark.stop()
   }

@@ -64,6 +64,16 @@ object Tables {
       _ => spread(spark, enabled, loadRaw(spark, dir, name)))
   }
 
+  /** Loads one row of every table under `dir`, so a bench's first timed
+    * query does not pay the file listings and footer reads. A table missing
+    * at this scale factor is skipped (NonFatal only: an OOM is not).
+    */
+  def warm(spark: SparkSession, dir: String): Unit =
+    names.foreach { n =>
+      try load(spark, dir, n).limit(1).count()
+      catch { case scala.util.control.NonFatal(_) => () }
+    }
+
   /** `load` without the `spread` repartition. For subtrees that re-execute
     * per iteration inside a recursive CTE's UnionLoop: there the spread's
     * round-robin exchange is re-paid at EVERY recursion level, while the

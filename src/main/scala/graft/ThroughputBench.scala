@@ -35,11 +35,7 @@ object ThroughputBench {
     spark.sparkContext.setLogLevel("ERROR")
 
     // warm the table plans once so per-stream cost is query work, not listing
-    Tables.names.foreach { n =>
-      // NonFatal only (missing table at this SF is fine; an OOM is not)
-      try Tables.load(spark, sfDir, n).limit(1).count()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+    Tables.warm(spark, sfDir)
 
     val work = new ConcurrentLinkedQueue[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach(q => work.add(q))
@@ -66,13 +62,15 @@ object ThroughputBench {
           val (name, fn) = next
           val s0 = System.nanoTime()
           // NonFatal only: an OOM or JVM error must abort the bench, not
-          // degrade into a low failure count under a misleading headline
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch {
-            case scala.util.control.NonFatal(t) =>
-              failures.add(s"$name:${t.getClass.getSimpleName}")
-          }
-          val took = System.nanoTime() - s0
+          // degrade into a low failure count under a misleading headline.
+          // A failed query's sample is its time to failure.
+          val took =
+            try (Bench.time(fn(spark, sfDir))._1 * 1e9).toLong
+            catch {
+              case scala.util.control.NonFatal(t) =>
+                failures.add(s"$name:${t.getClass.getSimpleName}")
+                System.nanoTime() - s0
+            }
           aggregateNanos.addAndGet(took)
           samples.add(Sample(name, id, took, s0 - t0))
           next = work.poll()

@@ -64,21 +64,25 @@ object NoiseQueries {
        | + cos($gLat*pi()/180.0e0)*cos($sLat*pi()/180.0e0)*pow(sin(($sLon-$gLon)*pi()/360.0e0),2)))"""
       .stripMargin.replace("\n", " ")
 
-  private val groundNoiseSql: String = {
-    val dist = haversineSql("g_lat", "g_lon", "s_lat", "s_lon")
+  /** The power-domain sum of each source's attenuated level over `dist_m`. */
+  private val dbSql: String = {
     val contrib = "s_db - 20.0e0*log10(greatest(dist_m, 1.0e0))"
-    val dbExpr = Det.rdetSql(
-      s"10.0e0*log10(${Det.dsumSql(s"pow(10.0e0, ($contrib)/10.0e0)")})", 2)
-    s"""
+    Det.rdetSql(s"10.0e0*log10(${Det.dsumSql(s"pow(10.0e0, ($contrib)/10.0e0)")})", 2)
+  }
+
+  /** Noise per grid cell from every source whose `dist` is within 20 km. */
+  private def gridNoiseSql(dist: String): String = s"""
       WITH grid AS ($gridSql),
            src AS ($sourcesSql),
            pairs AS (
              SELECT g_lat, g_lon, s_db, ($dist) AS dist_m FROM grid, src)
-      SELECT g_lat, g_lon, $dbExpr AS db
+      SELECT g_lat, g_lon, $dbSql AS db
       FROM pairs WHERE dist_m <= 20000.0e0
       GROUP BY g_lat, g_lon
       ORDER BY g_lat, g_lon"""
-  }
+
+  private val groundNoiseSql: String =
+    gridNoiseSql(haversineSql("g_lat", "g_lon", "s_lat", "s_lon"))
 
   /** Grid generation alone (reference functions.py:165-185): distributed
     * spark.range cross join, no driver materialization.
@@ -126,22 +130,8 @@ object NoiseQueries {
         .agg(dbPowerSum(col("contrib")).as("db"))
         .orderBy("g_lat", "g_lon")
     },
-    Some {
-      val ground = haversineSql("g_lat", "g_lon", "s_lat", "s_lon")
-      val dist3 = s"sqrt(pow($ground, 2) + pow(s_alt - 27.0e0, 2))"
-      val contrib = "s_db - 20.0e0*log10(greatest(dist_m, 1.0e0))"
-      val dbExpr = Det.rdetSql(
-        s"10.0e0*log10(${Det.dsumSql(s"pow(10.0e0, ($contrib)/10.0e0)")})", 2)
-      s"""
-      WITH grid AS ($gridSql),
-           src AS ($sourcesSql),
-           pairs AS (
-             SELECT g_lat, g_lon, s_db, ($dist3) AS dist_m FROM grid, src)
-      SELECT g_lat, g_lon, $dbExpr AS db
-      FROM pairs WHERE dist_m <= 20000.0e0
-      GROUP BY g_lat, g_lon
-      ORDER BY g_lat, g_lon"""
-    })
+    Some(gridNoiseSql(
+      s"sqrt(pow(${haversineSql("g_lat", "g_lon", "s_lat", "s_lon")}, 2) + pow(s_alt - 27.0e0, 2))")))
 
   /** Heatmap sink rows (reference functions.py:290-328): intensity = db/130
     * (functions.py:302), replacing the folium HTML sink with columnar rows.
@@ -192,9 +182,6 @@ object NoiseQueries {
     Some {
       // parenthesized: "s_lon - -1.6044" would otherwise emit "--", a SQL comment
       val dist = haversineSql("47.1542e0", "(-1.6044e0)", "s_lat", "s_lon")
-      val contrib = "s_db - 20.0e0*log10(greatest(dist_m, 1.0e0))"
-      val dbExpr = Det.rdetSql(
-        s"10.0e0*log10(${Det.dsumSql(s"pow(10.0e0, ($contrib)/10.0e0)")})", 2)
       s"""
       WITH src AS (
         SELECT (epoch_us(ts) // 86400000000) * 86400000000 AS day_us,
@@ -206,7 +193,7 @@ object NoiseQueries {
                     ELSE 90.0e0 END AS s_db
         FROM events WHERE event_id % 97 = 0),
       d AS (SELECT day_us, s_db, ($dist) AS dist_m FROM src)
-      SELECT day_us, $dbExpr AS db, count(*) AS n_sources
+      SELECT day_us, $dbSql AS db, count(*) AS n_sources
       FROM d WHERE dist_m <= 20000.0e0
       GROUP BY day_us ORDER BY day_us"""
     })
