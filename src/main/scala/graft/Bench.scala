@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query wall seconds
   * (median of SPARK_GRAFT_BENCH_REPEATS in-process runs, default 3).
-  * Every bench main times a query through [[time]].
+  * Every bench main times a query through [[time]] or [[timeRows]].
   *
   * The repeats are INTERLEAVED: the whole surface runs in `repeats` passes
   * and each query's median is taken ACROSS passes. Back-to-back repeats
@@ -35,18 +36,25 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 object Bench {
 
   /** Builds `df` and writes its whole output to the `noop` sink; returns the
-    * wall seconds of both and the output's row count. A `count()` would let
-    * Catalyst prune the output projections and under-measure expression-heavy
-    * plans; noop evaluates every output column without any I/O cost. The row
-    * count is observed on the same job, not by a second one.
+    * wall seconds of both. A `count()` would let Catalyst prune the output
+    * projections and under-measure expression-heavy plans; noop evaluates
+    * every output column without any I/O cost.
     */
-  def time(df: => DataFrame): (Double, Long) = {
-    val obs = new Observation()
+  def time(df: => DataFrame): Double = {
     val t0 = System.nanoTime()
-    operators.Observe.withQualityMetrics(df, obs, Nil, Nil)
-      .write.format("noop").mode("overwrite").save()
-    val sec = (System.nanoTime() - t0) / 1e9
-    (sec, obs.get("n_rows").asInstanceOf[Long])
+    df.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** [[time]] plus the output's row count, observed on the same job rather
+    * than by a second one. The count resolves only once the listener bus
+    * has delivered the write's end event, so the loops that discard it
+    * (Bench, ThroughputBench) call [[time]] and do not wait.
+    */
+  def timeRows(df: => DataFrame): (Double, Long) = {
+    val obs = new Observation()
+    val sec = time(df.observe(obs, count(lit(1)).as("rows")))
+    (sec, obs.get("rows").asInstanceOf[Long])
   }
 
   def main(args: Array[String]): Unit = {
@@ -131,7 +139,7 @@ object Bench {
     val errByName = scala.collection.mutable.Map.empty[String, String]
     def runOnce(name: String, fn: (SparkSession, String) => DataFrame): Unit = {
       val gc0 = gcMillis()
-      try timesByName(name) += time(fn(spark, sfDir))._1
+      try timesByName(name) += time(fn(spark, sfDir))
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         errByName(name) = e.getClass.getSimpleName
@@ -234,7 +242,7 @@ object Bench {
       .sortBy(-_._2).take(12).map { case (k, v) =>
         val gc0 = gcMillis()
         val runs = (1 to 3).map { _ =>
-          try time(SparkEntry.queries(k)(spark, sfDir))._1
+          try time(SparkEntry.queries(k)(spark, sfDir))
           catch { case scala.util.control.NonFatal(_) => -1.0 }
         }
         graft.operators.ScopedCache.drain()

@@ -42,11 +42,12 @@ object CorpusScaleBench {
       .cache()
     val nCorpus = corpus.count()
 
-    // Every DataFrame below is timed through Bench.time. The index writes and
-    // appends are not DataFrames, and the recall probes collect the hit count
-    // they report, so those keep their own clock.
+    // Every DataFrame below is timed through Bench.timeRows (Bench.time where
+    // no row count is reported). The index writes and appends are not
+    // DataFrames, and the recall probes collect the hit count they report,
+    // so those keep their own clock.
     def time(label: String)(df: => org.apache.spark.sql.DataFrame): (String, Double, Long) = {
-      val (sec, rows) = Bench.time(df)
+      val (sec, rows) = Bench.timeRows(df)
       (label, sec, rows)
     }
 
@@ -192,7 +193,7 @@ object CorpusScaleBench {
       // 4 banded rows per indexed doc
       val indexedDocs = spark.table("csb_sim64_index").count() / 4
       val delta = sim64All.filter(col("doc_id") % replicas === r)
-      val (probeSec, pairRows) = Bench.time(operators.Dedup.probeSim64Index(
+      val (probeSec, pairRows) = Bench.timeRows(operators.Dedup.probeSim64Index(
         delta, maxHamming = 3, indexTable = "csb_sim64_index"))
       val tApp = System.nanoTime()
       operators.Dedup.appendSim64Index(delta, indexTable = "csb_sim64_index")
@@ -245,7 +246,7 @@ object CorpusScaleBench {
       // ONE brute pass: the timed materialization IS the ground truth
       val truth = operators.Similarity.topKBruteL2(embCorpus, nQ, topK)
         .select(col("q_id"), col("vec_id")).cache()
-      val bruteSec = Bench.time(truth)._1
+      val bruteSec = Bench.time(truth)
       // NOTE: each kClusters' FIRST run also pays its (cached) Lloyd fit;
       // the fit is shared across same-k settings via KMeans' fit
       // memoization, so later deltas at that k are pure probe cost.
@@ -290,7 +291,7 @@ object CorpusScaleBench {
       val target = 512
       val kDerived = math.max(4L, (nV + target - 1) / target)
       val obs = new org.apache.spark.sql.Observation("semdedup_caps")
-      val (sec, keptRows) = Bench.time(operators.Similarity.semanticDedup(embCorpus,
+      val (sec, keptRows) = Bench.timeRows(operators.Similarity.semanticDedup(embCorpus,
         targetClusterSize = target, maxDominators = 4096, threshold = 0.35,
         drops = Some(obs)).filter(col("kept") === 1))
       val m = obs.get
@@ -340,7 +341,7 @@ object CorpusScaleBench {
       val annBuildSec = (System.nanoTime() - tB) / 1e9
       val steps = (0 until nIngest).map { j =>
         val indexedVecs = spark.table("csb_ann_vecs").count()
-        val (probeSec, rowsOut) = Bench.time(operators.Similarity.probePqIndex(
+        val (probeSec, rowsOut) = Bench.timeRows(operators.Similarity.probePqIndex(
           spark, nQ, topK, radius = 4,
           codesTable = "csb_ann_codes", vecTable = "csb_ann_vecs"))
         val lo = histCut + j.toLong * nBaseVecs

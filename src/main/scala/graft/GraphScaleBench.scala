@@ -50,7 +50,7 @@ object GraphScaleBench {
       val l = new PeakListener
       spark.sparkContext.addSparkListener(l)
       var rounds = 0
-      val (sec, nLabels) = Bench.time {
+      val (sec, nLabels) = Bench.timeRows {
         val (labels, r) = operators.Graph.connectedComponents(edges)
         rounds = r
         labels

@@ -26,11 +26,11 @@ object RefScaleBench {
     val sources = queries.NoiseQueries.sources(spark, sfDir).cache()
     val nSources = sources.count()
 
-    val broadcast = Bench.time(noise.Noise.groundNoise(grid, sources))
-    val bucketed = Bench.time(noise.Noise.groundNoiseBucketed(grid, sources))
+    val broadcast = Bench.timeRows(noise.Noise.groundNoise(grid, sources))
+    val bucketed = Bench.timeRows(noise.Noise.groundNoiseBucketed(grid, sources))
     // same naive query, bucketed automatically by the optimizer rule
     GraftExtensions.installInto(spark)
-    val ruleRewritten = Bench.time(noise.Noise.groundNoise(grid, sources))
+    val ruleRewritten = Bench.timeRows(noise.Noise.groundNoise(grid, sources))
     val qs = Seq("broadcast" -> broadcast, "bucketed" -> bucketed, "rule_rewritten" -> ruleRewritten)
       .map { case (k, (v, n)) => s""""$k":{"sec":$v,"rows":$n}""" }.mkString("{", ",", "}")
     println(s"""{"metric":"refscale_noise","grid_cells":1002001,"sources":$nSources,"variants":$qs,"sf":"$sfDir","cpus":$cpus}""")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev-only per-query profiler (not part of the library surface). For each
-  * named query: two runs through [[Bench.time]], one stderr line per
+  * named query: two runs through [[Bench.timeRows]], one stderr line per
   * finished stage, then AQE's final plan of the second run. `graft.Plans`
   * prints the planned (not yet executed) plans.
   *
@@ -27,7 +27,7 @@ object Scratch {
     })
     // The noop write's own QueryExecution, whose adaptive plan is final once
     // it has run (`df.queryExecution` would plan the query afresh). This
-    // listener is registered before Bench.time's first observation, so it
+    // listener is registered before Bench.timeRows' first observation, so it
     // sees each write before that write's row count resolves.
     val lastRun = new java.util.concurrent.atomic.AtomicReference[QueryExecution]()
     spark.listenerManager.register(new QueryExecutionListener {
@@ -41,7 +41,7 @@ object Scratch {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to 2).foreach { round =>
-        val (sec, rows) = Bench.time(fn(spark, sfDir))
+        val (sec, rows) = Bench.timeRows(fn(spark, sfDir))
         println(f"PROFILE $name round$round $sec%.2f s $rows rows")
       }
       println(s"== FINAL PLAN $name ==")

@@ -65,7 +65,7 @@ object ThroughputBench {
           // degrade into a low failure count under a misleading headline.
           // A failed query's sample is its time to failure.
           val took =
-            try (Bench.time(fn(spark, sfDir))._1 * 1e9).toLong
+            try (Bench.time(fn(spark, sfDir)) * 1e9).toLong
             catch {
               case scala.util.control.NonFatal(t) =>
                 failures.add(s"$name:${t.getClass.getSimpleName}")

@@ -49,7 +49,7 @@ class ObserveSpec extends SparkTestBase {
     assert(m("neg_v") == 45L)
   }
 
-  test("Bench.time evaluates the whole output in one job and observes its row count") {
+  test("Bench.timeRows evaluates the whole output in one job and observes its row count") {
     // an RDD, not a local Seq: the optimizer would fold a local relation's
     // projections into the relation and leave no plan to check
     val docs = spark.sparkContext.parallelize(Seq(
@@ -68,7 +68,7 @@ class ObserveSpec extends SparkTestBase {
     spark.listenerManager.register(listener)
     var rows = -1L
     // jobsOf's fence also orders the listener's call before the asserts
-    val jobs = try jobsOf { rows = Bench.time(sigs)._2 }
+    val jobs = try jobsOf { rows = Bench.timeRows(sigs)._2 }
       finally spark.listenerManager.unregister(listener)
     assert(rows == sigs.count())
     assert(jobs.size == 1)
