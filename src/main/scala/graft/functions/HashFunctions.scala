@@ -31,10 +31,6 @@ object HashFunctions {
   def hash32At(c: Column, pos: Int): Column =
     conv(substring(md5(c), pos, 8), 16, 10).cast("long")
 
-  /** Universal hash family member: h_i(x) = (a*hash32(x) + b) mod Prime. */
-  def universalHash(c: Column, a: Long, b: Long): Column =
-    pmod(lit(a) * hash32(c) + lit(b), lit(Prime))
-
   /** Fixed (a, b) parameters for the minhash family — deterministic, shared
     * with the SQL oracle. Small odd multipliers chosen < 2^20.
     */
@@ -63,18 +59,4 @@ object HashFunctions {
             (s, h) => s + when((call_function("shiftright", h, b) % 2) === 1, 1L).otherwise(-1L)
           ) > 0,
           call_function("shiftleft", lit(1L), b)).otherwise(0L))
-
-  /** 32-bit simhash over an array<string> column. */
-  def simhash32(tokens: Column): Column =
-    simhashFromHashes(transform(tokens, hash32 _))
-
-  /** Rolling polynomial fingerprint over the characters of a string:
-    * fold(chars, 0, (acc, ch) -> (acc*31 + ascii(ch)) mod Prime).
-    * Engine-portable (DuckDB: list_reduce over string_split).
-    */
-  def charFingerprint(c: Column): Column =
-    aggregate(
-      split(c, ""),
-      lit(0L),
-      (acc, ch) => pmod(acc * 31L + ascii(ch), lit(Prime)))
 }

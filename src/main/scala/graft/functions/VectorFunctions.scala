@@ -13,11 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  private def asDouble(v: Column): Column = transform(v, _.cast("double"))
-
-  /** Sequential left fold sum of an array<double> column. */
-  private def fsum(v: Column): Column = aggregate(v, lit(0.0d), (s, x) => s + x)
-
   def dot(a: Column, b: Column): Column = graft.plans.VectorDotProduct(a, b)
 
   def norm2(a: Column): Column = sqrt(dot(a, a))
@@ -26,8 +21,4 @@ object VectorFunctions {
     * propagate null.
     */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm2(a) * norm2(b))
-
-  /** Squared L2 distance. */
-  def l2Sq(a: Column, b: Column): Column =
-    fsum(zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)))
 }

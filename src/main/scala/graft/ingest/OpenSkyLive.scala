@@ -7,7 +7,9 @@ import java.nio.charset.StandardCharsets
 import java.time.Duration
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.sources.{Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.Filter
+
+import graft.sources.GeoBound
 
 /** Live HTTP mode for the OpenSky source — the reference's network ingest
   * (scripts/functions.py:23-50) re-expressed for the DSv2 connector:
@@ -15,11 +17,11 @@ import org.apache.spark.sql.sources.{Filter, GreaterThan, GreaterThanOrEqual, Le
   * then `GET <url>?lamin&lomin&lamax&lomax` with the bbox as query params
   * (functions.py:42-50).
   *
-  * The bbox is NOT an option: it is derived from the Spark filters the scan
-  * pushed down ([[bboxParams]]), so `.filter($"latitude" >= x)` on the
-  * DataFrame becomes `lamin=x` on the wire — source-level predicate pushdown
-  * all the way to the server, exactly the reference's manual trick made
-  * automatic.
+  * The bbox is derived from the Spark filters the scan pushed down
+  * ([[bboxParams]]), so `.filter($"latitude" >= x)` on the DataFrame
+  * becomes `lamin=x` on the wire — source-level predicate pushdown all the
+  * way to the server, the reference's manual trick made automatic. The
+  * `lamin`/`lamax`/`lomin`/`lomax` options fill the sides no filter bounds.
   *
   * Everything runs on the driver at planning time (one snapshot per query
   * execution — the API returns one global state vector set, there is nothing
@@ -40,13 +42,9 @@ object OpenSkyLive {
     * filter, which the reader re-applies exactly anyway.
     */
   def bboxParams(filters: Array[Filter]): Seq[(String, String)] = {
+    val bounds = filters.toSeq.flatMap(GeoBound.of)
     def side(attr: String, lower: Boolean): Option[Double] = {
-      val bs = filters.toSeq.collect {
-        case GreaterThan(a, v: java.lang.Double) if a == attr && lower => v.doubleValue
-        case GreaterThanOrEqual(a, v: java.lang.Double) if a == attr && lower => v.doubleValue
-        case LessThan(a, v: java.lang.Double) if a == attr && !lower => v.doubleValue
-        case LessThanOrEqual(a, v: java.lang.Double) if a == attr && !lower => v.doubleValue
-      }
+      val bs = bounds.filter(b => b.attr == attr && b.lower == lower).map(_.value)
       if (bs.isEmpty) None else Some(if (lower) bs.max else bs.min)
     }
     Seq("lamin" -> side("latitude", lower = true),

@@ -18,9 +18,8 @@ import graft.model.StateVector
   *   - callsigns arrive right-padded with spaces → trimmed at ingest (Q7).
   *
   * The HTTP/OAuth half of the reference (functions.py:23-50) is driver-side
-  * I/O, not a query operator; a live source would wrap this parser in a
-  * foreachBatch poller or DSv2 MicroBatchStream (SURVEY.md §7.6) — kept out
-  * so CI never touches the network.
+  * I/O, not a query operator: it lives in [[OpenSkyLive]] behind the DSv2
+  * connector's `mode=live` ([[graft.sources.OpenSkyTableProvider]]).
   */
 object OpenSkyParser {
 
@@ -60,11 +59,4 @@ object OpenSkyParser {
     case "callsign" => StringTrim(raw)
     case _ => Cast(raw, dt, None, EvalMode.TRY)
   }
-
-  /** Parity helper: rows usable by the noise pipeline — position present and
-    * on_ground known (the reference crashes on such nulls, SURVEY.md §7.4 Q5).
-    */
-  def usableForNoise(states: DataFrame): DataFrame =
-    states.filter(col("latitude").isNotNull && col("longitude").isNotNull &&
-      col("on_ground").isNotNull)
 }

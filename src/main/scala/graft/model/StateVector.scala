@@ -3,27 +3,9 @@ package graft.model
 import org.apache.spark.sql.types._
 
 /** The OpenSky flight state-vector row (reference scripts/functions.py:73-91;
-  * SURVEY.md §1.2). Field order matches the positional payload arrays.
+  * SURVEY.md §1.2): its typed slots, in the order of the positional payload
+  * arrays, and the raw payload's schema.
   */
-final case class StateVector(
-    icao24: String,
-    callsign: String,
-    origin_country: String,
-    time_position: Option[Long],
-    last_contact: Option[Long],
-    longitude: Option[Double],
-    latitude: Option[Double],
-    baro_altitude: Option[Double],
-    on_ground: Option[Boolean],
-    velocity: Option[Double],
-    true_track: Option[Double],
-    vertical_rate: Option[Double],
-    sensors: Option[Seq[Int]],
-    geo_altitude: Option[Double],
-    squawk: String,
-    spi: Option[Boolean],
-    position_source: Option[Int])
-
 object StateVector {
 
   /** Target Spark types per positional slot (reference functions.py:73-91). */

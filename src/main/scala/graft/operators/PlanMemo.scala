@@ -129,13 +129,6 @@ private[graft] final class PlanMemo[K, V](max: Int = 64,
 
   /** Entry count — spec hook. */
   private[graft] def size: Int = map.size()
-
-  /** Drop everything (test isolation). */
-  private[graft] def clearForTesting(): Unit = {
-    val keys = new java.util.ArrayList(map.keySet())
-    keys.forEach(k => evict(k))
-    order.clear()
-  }
 }
 
 private[graft] object PlanMemo {

@@ -71,11 +71,6 @@ object Sitemap {
         // the name ends at the first whitespace (attributes skipped)
         Some(inner.takeWhile(c => !c.isWhitespace))
       }
-      def closeTag(name: String): Boolean = {
-        if (!text.startsWith(s"</$name>", p)) return false
-        p += name.length + 3
-        true
-      }
       val root = openTag().getOrElse(return None)
       val (isIndex, entryTag) = root match {
         case "urlset" => (false, "url")

@@ -23,11 +23,9 @@ class GoldenFixtureSpec extends SparkTestBase {
       .stripMargin.replace("\n", " ")
 
   test("fixture pipeline matches oracle-reproduced golden cells") {
-    val states = ingest.OpenSkyParser.usableForNoise(
-      ingest.OpenSkyParser.parse(Seq(payload).toDS()))
     val out = noise.Noise.groundNoise(
         noise.Noise.grid(spark, 47.1542, -1.6044, 500.0, 4),
-        noise.Noise.classifySource(states))
+        noise.Noise.classifySource(ingest.OpenSkyParser.parse(Seq(payload).toDS())))
       .orderBy("g_lat", "g_lon").collect()
     assert(out.length == 81) // all 9x9 cells within 20 km of both sources
     val golden = Seq( // verified against the DuckDB §3.3 formula

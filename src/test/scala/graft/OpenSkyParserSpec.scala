@@ -62,13 +62,12 @@ class OpenSkyParserSpec extends SparkTestBase {
   }
 
   test("null-position rows are excluded from the noise-usable set") {
-    val usable = OpenSkyParser.usableForNoise(OpenSkyParser.parse(Seq(payload).toDS()))
+    val usable = graft.noise.Noise.classifySource(OpenSkyParser.parse(Seq(payload).toDS()))
     assert(usable.count() == 2)
   }
 
   test("end-to-end: fixture ingest feeds classification and ground noise") {
-    val states = OpenSkyParser.usableForNoise(OpenSkyParser.parse(Seq(payload).toDS()))
-    val sources = graft.noise.Noise.classifySource(states)
+    val sources = graft.noise.Noise.classifySource(OpenSkyParser.parse(Seq(payload).toDS()))
     val rows = sources.orderBy("s_lat").collect()
     // 47.14 on_ground -> 80 dB @27m; 47.16 climbing (4.2 m/s) -> 130 dB
     assert(rows(0).getDouble(2) == 80.0 && rows(0).getDouble(3) == 27.0)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** DSv2 source tests: schema, values vs the OpenSkyParser on the same
@@ -62,6 +62,30 @@ class OpenSkySourceSpec extends SparkTestBase {
     assert(!plan.split("BatchScan").head.contains("47.0"), plan)
     assert(boxed.select("icao24").as[String].collect().sorted.toSeq ==
       Seq("39c4a1", "4ca7b3")) // Spain row filtered source-side
+
+    // a pushed bound keeps exactly the rows Spark's own Filter keeps: a
+    // "NaN" slot try-casts to NaN, which orders above every double, and a
+    // null coordinate passes no bound
+    def odd(id: String, lon: String, lat: String) =
+      s"""["$id", "ODD", "X", 1, 1, $lon, $lat, 1.0, false, 1.0, 1.0, 1.0,
+         | null, 1.0, "1", false, 0]""".stripMargin.replace("\n", " ")
+    val withOdd = payload.replace("] ] }", Seq(
+      odd("aa0001", "\"NaN\"", "\"NaN\""), odd("aa0002", "-1.6", "\"NaN\""),
+      odd("aa0003", "\"NaN\"", "47.1"), odd("aa0004", "null", "null"))
+      .mkString("], ", ", ", " ] }"))
+    val viaSource = spark.read.format("graft.sources.OpenSkyTableProvider")
+      .option("payload", withOdd).load()
+    val viaParser = ingest.OpenSkyParser.parse(Seq(withOdd).toDS())
+    for ((c, v) <- Seq("latitude" -> 40.0, "longitude" -> -1.58);
+         (shape, f) <- Seq[(String, Column => Column)](
+           "GreaterThan" -> (_ > v), "GreaterThanOrEqual" -> (_ >= v),
+           "LessThan" -> (_ < v), "LessThanOrEqual" -> (_ <= v))) {
+      def ids(df: DataFrame): Seq[String] =
+        df.filter(f(col(c))).select("icao24").as[String].collect().sorted.toSeq
+      val plan = viaSource.filter(f(col(c))).queryExecution.executedPlan.toString
+      assert(plan.contains(s"PushedFilters: [$shape($c,$v)"), plan)
+      assert(ids(viaSource) == ids(viaParser), s"$shape($c,$v)")
+    }
   }
 
   test("column pruning reaches the scan") {

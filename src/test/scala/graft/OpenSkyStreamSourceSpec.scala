@@ -22,23 +22,28 @@ class OpenSkyStreamSourceSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("snaps")
     Files.writeString(Paths.get(dir.toString, "s0.json"), snapshot("France", 2))
     Files.writeString(Paths.get(dir.toString, "s1.json"), snapshot("Ireland", 3))
-    val stream = spark.readStream
-      .format("graft.sources.OpenSkyStreamProvider")
-      .option("paths", s"$dir/s0.json,$dir/s1.json")
-      .load()
-    assert(stream.schema == sources.OpenSkySnapshot.schema)
-    val q = stream.groupBy("origin_country").agg(count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName("opensky_stream_test")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("opensky_stream_test")
-        .orderBy("origin_country").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
-      assert(rows == Seq(("France", 2L), ("Ireland", 3L)))
-      // one snapshot per trigger: at least two batches ran
-      assert(q.recentProgress.count(_.numInputRows > 0) >= 2, q.recentProgress.toSeq.map(_.numInputRows))
-    } finally q.stop()
+    // the alias the benchmark loads, and the one class behind it
+    for ((format, sink) <- Seq(
+        "graft.sources.OpenSkyStreamProvider" -> "opensky_stream_test",
+        "graft.sources.OpenSkyTableProvider" -> "opensky_table_stream_test")) {
+      val stream = spark.readStream
+        .format(format)
+        .option("paths", s"$dir/s0.json,$dir/s1.json")
+        .load()
+      assert(stream.schema == sources.OpenSkySnapshot.schema)
+      val q = stream.groupBy("origin_country").agg(count(lit(1)).as("n"))
+        .writeStream.format("memory").queryName(sink)
+        .outputMode("complete").start()
+      try {
+        q.processAllAvailable()
+        val rows = spark.table(sink)
+          .orderBy("origin_country").collect()
+          .map(r => (r.getString(0), r.getLong(1))).toSeq
+        assert(rows == Seq(("France", 2L), ("Ireland", 3L)), format)
+        // one snapshot per trigger: at least two batches ran
+        assert(q.recentProgress.count(_.numInputRows > 0) >= 2, q.recentProgress.toSeq.map(_.numInputRows))
+      } finally q.stop()
+    }
   }
 
   test("Trigger.AvailableNow drains every snapshot in one run, then stops") {
@@ -74,8 +79,10 @@ class OpenSkyStreamSourceSpec extends SparkTestBase {
     // `start` of the admission-control latestOffset — the next offset
     // derives from the committed position, so it can never regress
     // (the pre-fix cursor design restarted polling from zero)
-    val stream = new sources.OpenSkyMicroBatchStream(
-      sources.SnapshotFeed.fromOptions(Map("paths" -> paths)))
+    val stream = new sources.OpenSkyTable(Map("paths" -> paths))
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build().toMicroBatchStream(dir.toString)
+      .asInstanceOf[sources.OpenSkyMicroBatchStream]
     val recovered = stream.deserializeOffset("2").asInstanceOf[sources.SnapshotOffset]
     assert(recovered.n == 2L)
     val next = stream.latestOffset(recovered,
