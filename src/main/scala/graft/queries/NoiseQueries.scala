@@ -44,7 +44,7 @@ object NoiseQueries {
   /** [[sourcesOf]] the `events` table. */
   def sources(s: SparkSession, dir: String): DataFrame = sourcesOf(Tables.load(s, dir, "events"))
 
-  private[queries] val sourcesSql: String = """
+  private val sourcesSql: String = """
     SELECT 47.1542e0 + (((event_id*7919+13) % 4001) - 2000) * 0.00005e0 AS s_lat,
            -1.6044e0 + (((event_id*104729+7) % 4001) - 2000) * 0.00005e0 AS s_lon,
            CASE WHEN event_type = 'error' THEN 110.0e0
@@ -54,12 +54,12 @@ object NoiseQueries {
            100.0e0 + CAST(event_id % 900 AS DOUBLE) AS s_alt
     FROM events WHERE event_id % 97 = 0"""
 
-  private[queries] val gridSql: String = s"""
+  private val gridSql: String = s"""
     SELECT floor((47.1542e0 + i * ((500.0e0/6371000.0e0)*(180.0e0/pi()))) * 1e6 + 0.5)/1e6 AS g_lat,
            floor((-1.6044e0 + j * ((500.0e0/(6371000.0e0*cos(47.1542e0*pi()/180.0e0)))*(180.0e0/pi()))) * 1e6 + 0.5)/1e6 AS g_lon
     FROM generate_series(-$N, $N) gi(i), generate_series(-$N, $N) gj(j)"""
 
-  private[queries] def haversineSql(gLat: String, gLon: String, sLat: String, sLon: String): String =
+  private def haversineSql(gLat: String, gLon: String, sLat: String, sLon: String): String =
     s"""2.0e0*6371000.0e0*asin(sqrt(pow(sin(($sLat-$gLat)*pi()/360.0e0),2)
        | + cos($gLat*pi()/180.0e0)*cos($sLat*pi()/180.0e0)*pow(sin(($sLon-$gLon)*pi()/360.0e0),2)))"""
       .stripMargin.replace("\n", " ")
@@ -119,17 +119,10 @@ object NoiseQueries {
     */
   val q21NoiseSlant3d: QueryDef = QueryDef(
     "q21_noise_slant3d",
-    (s, dir) => {
-      val g = Noise.grid(s, Lat0, Lon0, StepM, N)
-      g.crossJoin(broadcast(sources(s, dir)))
-        .withColumn("dist_m",
-          slantDistanceMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon"), col("s_alt")))
-        .filter(col("dist_m") <= RMaxM)
-        .withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
-        .groupBy("g_lat", "g_lon")
-        .agg(dbPowerSum(col("contrib")).as("db"))
-        .orderBy("g_lat", "g_lon")
-    },
+    (s, dir) => Noise.perCellDb(Noise.pairs(Noise.grid(s, Lat0, Lon0, StepM, N), sources(s, dir),
+        cells = false,
+        slantDistanceMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon"), col("s_alt"))))
+      .orderBy("g_lat", "g_lon"),
     Some(gridNoiseSql(
       s"sqrt(pow(${haversineSql("g_lat", "g_lon", "s_lat", "s_lon")}, 2) + pow(s_alt - 27.0e0, 2))")))
 
@@ -198,7 +191,45 @@ object NoiseQueries {
       GROUP BY day_us ORDER BY day_us"""
     })
 
+  /** Spatial 1-nearest-neighbour: for each grid cell, the closest aircraft
+    * within the 20 km audibility radius, over the geo-cell pairing the
+    * bucketed kernel scales on (`Noise.pairs` with `cells = true`, whose
+    * recall equals the brute-force cross join the oracle computes). The
+    * distance is rounded to 2 decimals before the cutoff and the argmin, so
+    * ties break on the source's columns in both engines. The per-cell argmin
+    * is a `min(struct(...))` aggregate in the join's stage — no window, no
+    * exchange after the join.
+    */
+  val q123NearestSource: QueryDef = QueryDef(
+    "q123_nearest_source",
+    (s, dir) => Noise.pairs(Noise.grid(s, Lat0, Lon0, StepM, N), sources(s, dir),
+        cells = true, Det.rdet(Noise.groundDistM, 2))
+      .groupBy("g_lat", "g_lon")
+      .agg(min(struct(col("dist_m"), col("s_lat"), col("s_lon"), col("s_db"),
+        col("s_alt"))).as("nn"))
+      .select(col("g_lat"), col("g_lon"),
+        col("nn.dist_m").as("dist_m"), col("nn.s_lat").as("n_lat"),
+        col("nn.s_lon").as("n_lon"), col("nn.s_db").as("n_db"))
+      .orderBy("g_lat", "g_lon"),
+    Some {
+      val dist = haversineSql("g_lat", "g_lon", "s_lat", "s_lon")
+      s"""
+      WITH grid AS ($gridSql),
+      src AS ($sourcesSql),
+      pairs AS (
+        SELECT g_lat, g_lon, s_lat, s_lon, s_db, s_alt,
+               ${Det.rdetSql(s"($dist)", 2)} AS dist_r
+        FROM grid, src),
+      ranked AS (
+        SELECT *, row_number() OVER (PARTITION BY g_lat, g_lon
+                    ORDER BY dist_r, s_lat, s_lon, s_db, s_alt) AS rn
+        FROM pairs WHERE dist_r <= 20000.0e0)
+      SELECT g_lat, g_lon, dist_r AS dist_m, s_lat AS n_lat, s_lon AS n_lon,
+             s_db AS n_db
+      FROM ranked WHERE rn = 1 ORDER BY g_lat, g_lon"""
+    })
+
   val all: Seq[QueryDef] = Seq(
     q18GridGen, q19NoiseFlagship, q20NoiseBucketed, q21NoiseSlant3d,
-    q22Heatmap, q23ClassifySources, q64NoiseTimeseries)
+    q22Heatmap, q23ClassifySources, q64NoiseTimeseries, q123NearestSource)
 }

@@ -4,14 +4,12 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Det
-import graft.functions.GeoFunctions._
 import graft.functions.HashFunctions
-import graft.noise.Noise
 import graft.operators.{Ranks, Sketches}
 
 /** Round-4 surface, second tranche: char-level exact-substring dedup,
-  * sketch-verified heavy hitters, spatial 1-NN, histograms, robust
-  * statistics, a one-pass correlation matrix, and one-pass column profiling.
+  * sketch-verified heavy hitters, histograms, robust statistics, a one-pass
+  * correlation matrix, and one-pass column profiling.
   * Determinism per [[graft.functions.Det]].
   */
 object Round4Queries2 {
@@ -103,57 +101,6 @@ object Round4Queries2 {
       FROM nz CROSS JOIN t
       GROUP BY word, total HAVING count(*) * 30 > total
       ORDER BY word"""))
-
-  /** Spatial 1-nearest-neighbour: for each grid cell, the closest aircraft
-    * within the 20 km audibility radius — argmin over the same geo-cell
-    * bucketed candidate join the noise pipeline scales on (a 3×3 neighbour
-    * ring of ≥R_MAX cells provably contains every source within R_MAX, so
-    * the bucketed argmin equals the brute-force one the oracle computes).
-    * The per-cell argmin is a `min(struct(...))` hash aggregate — no window,
-    * no shuffle beyond the bucket join's.
-    */
-  val q123NearestSource: QueryDef = QueryDef(
-    "q123_nearest_source",
-    (s, dir) => {
-      val cellDeg = RMaxM / EarthRadiusM * (180.0 / math.Pi) * 2.0
-      val g = Noise.grid(s, Noise.NantesLat, Noise.NantesLon, 500.0, 30)
-        .withColumn("cell_i", floor(col("g_lat") / cellDeg).cast("long"))
-        .withColumn("cell_j", floor(col("g_lon") / cellDeg).cast("long"))
-      val src = NoiseQueries.sources(s, dir)
-        .withColumn("di", explode(sequence(lit(-1), lit(1))))
-        .withColumn("dj", explode(sequence(lit(-1), lit(1))))
-        .withColumn("cell_i", floor(col("s_lat") / cellDeg).cast("long") + col("di"))
-        .withColumn("cell_j", floor(col("s_lon") / cellDeg).cast("long") + col("dj"))
-        .drop("di", "dj")
-      g.join(src, Seq("cell_i", "cell_j"))
-        .withColumn("dist_r", Det.rdet(
-          haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")), 2))
-        .filter(col("dist_r") <= RMaxM)
-        .groupBy("g_lat", "g_lon")
-        .agg(min(struct(col("dist_r"), col("s_lat"), col("s_lon"), col("s_db"),
-          col("s_alt"))).as("nn"))
-        .select(col("g_lat"), col("g_lon"),
-          col("nn.dist_r").as("dist_m"), col("nn.s_lat").as("n_lat"),
-          col("nn.s_lon").as("n_lon"), col("nn.s_db").as("n_db"))
-        .orderBy("g_lat", "g_lon")
-    },
-    Some {
-      val dist = NoiseQueries.haversineSql("g_lat", "g_lon", "s_lat", "s_lon")
-      s"""
-      WITH grid AS (${NoiseQueries.gridSql}),
-      src AS (${NoiseQueries.sourcesSql}),
-      pairs AS (
-        SELECT g_lat, g_lon, s_lat, s_lon, s_db, s_alt,
-               ${Det.rdetSql(s"($dist)", 2)} AS dist_r
-        FROM grid, src),
-      ranked AS (
-        SELECT *, row_number() OVER (PARTITION BY g_lat, g_lon
-                    ORDER BY dist_r, s_lat, s_lon, s_db, s_alt) AS rn
-        FROM pairs WHERE dist_r <= 20000.0e0)
-      SELECT g_lat, g_lon, dist_r AS dist_m, s_lat AS n_lat, s_lon AS n_lon,
-             s_db AS n_db
-      FROM ranked WHERE rn = 1 ORDER BY g_lat, g_lon"""
-    })
 
   /** Equi-width histogram over order prices: bucket = floor(v/5000) clamped
     * to [0,19] (pure shared-IEEE arithmetic — no engine-specific
@@ -331,6 +278,6 @@ object Round4Queries2 {
     })
 
   val all: Seq[QueryDef] =
-    Seq(q121SubstringDedup, q122HeavyHitters, q123NearestSource, q124Histogram,
-      q125MadRobust, q126CorrMatrix, q127ColumnProfile)
+    Seq(q121SubstringDedup, q122HeavyHitters, q124Histogram, q125MadRobust,
+      q126CorrMatrix, q127ColumnProfile)
 }

@@ -383,23 +383,18 @@ object EventsStreaming {
 
   /** Streaming ground-noise estimation: the flagship pipeline over a live
     * feed. Events classify into noise sources (`NoiseQueries.sourcesOf`),
-    * stream-static join against the precomputed ground grid (the static
-    * side broadcasts — no state), then a watermarked tumbling window
-    * aggregates the power-domain sum per cell per window. This is the
-    * reference's batch snapshot loop (reference functions.py:279-330 runs
-    * once per invocation) turned into a continuous query.
+    * each micro-batch's sources are broadcast onto the static grid through
+    * the noise family's one pairing (`Noise.pairs`, nested loop; no state),
+    * then a watermarked tumbling window aggregates the power-domain sum per
+    * cell per window (`Noise.perCellDb`). This is the reference's batch
+    * snapshot loop (reference functions.py:279-330 runs once per invocation)
+    * turned into a continuous query.
     */
   def streamingNoise(staticGrid: DataFrame, events: DataFrame,
                      windowLen: String = "5 minutes"): DataFrame = {
-    import graft.functions.GeoFunctions._
-    graft.queries.NoiseQueries.sourcesOf(events.withWatermark("ts", "10 minutes"), col("ts"))
-      .join(broadcast(staticGrid)) // stream-static cross join, grid broadcast
-      .withColumn("dist_m",
-        haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")))
-      .filter(col("dist_m") <= RMaxM)
-      .withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
-      .groupBy(window(col("ts"), windowLen).as("w"), col("g_lat"), col("g_lon"))
-      .agg(dbPowerSum(col("contrib")).as("db"))
+    import graft.noise.Noise
+    val sources = graft.queries.NoiseQueries.sourcesOf(events.withWatermark("ts", "10 minutes"), col("ts"))
+    Noise.perCellDb(Noise.pairs(staticGrid, sources, cells = false), window(col("ts"), windowLen).as("w"))
       .select(col("w.start").as("window_start"), col("g_lat"), col("g_lon"), col("db"))
   }
 

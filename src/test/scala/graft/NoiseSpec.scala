@@ -48,7 +48,9 @@ class NoiseSpec extends SparkTestBase {
       (1.0, 1.0, false, Some(-1.5), Some(300.0), 90.0, 300.0),  // boundary = cruise
       (1.0, 1.0, false, Some(1.5), Some(300.0), 90.0, 300.0),   // boundary = cruise
       (1.0, 1.0, false, None, Some(300.0), 90.0, 300.0),        // null vr = cruise
-      (1.0, 1.0, false, Some(0.0), None, 90.0, 27.0))           // null alt = ref alt
+      (1.0, 1.0, false, Some(0.0), None, 90.0, 27.0),           // null alt = ref alt
+      (1.0, 1.0, false, Some(Double.NaN), Some(300.0), 90.0, 300.0), // NaN vr = cruise
+      (1.0, 1.0, false, Some(0.0), Some(Double.NaN), 90.0, 27.0))    // NaN alt = ref alt
     val df = rows.map(r => (r._1, r._2, r._3, r._4, r._5))
       .toDF("latitude", "longitude", "on_ground", "vertical_rate", "geo_altitude")
     val out = Noise.classifySource(df).collect()
@@ -154,18 +156,26 @@ class NoiseSpec extends SparkTestBase {
     // near the seam) plus points within 1 m of the 20 km edge of every
     // source. Both kernels, and `groundNoise` rewritten by
     // `BucketedRangeJoinRule`, must return exactly the rows of the plain
-    // cross join that sends every pair straight to the haversine.
-    import org.apache.spark.sql.DataFrame
+    // cross join that sends every pair straight to the haversine; q21's
+    // slant-distance sum and q123's nearest source on the rounded haversine,
+    // run through `Noise.pairs` with either probe, must return those of the
+    // cross join on their distance.
+    import org.apache.spark.sql.{Column, DataFrame}
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     import spark.implicits._
-    def reference(grid: DataFrame, src: DataFrame): DataFrame =
-      grid.crossJoin(broadcast(src))
-        .withColumn("dist_m", haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon")))
-        .filter(col("dist_m") <= RMaxM)
-        .withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
+    def reference(grid: DataFrame, src: DataFrame, dist: Column, agg: DataFrame => DataFrame): DataFrame =
+      agg(grid.crossJoin(broadcast(src)).withColumn("dist_m", dist).filter(col("dist_m") <= RMaxM))
+    val haversine = haversineMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon"))
+    val slant = slantDistanceMeters(col("g_lat"), col("g_lon"), col("s_lat"), col("s_lon"), col("s_alt"))
+    val rounded = graft.functions.Det.rdet(haversine, 2)
+    def powerSum(pairs: DataFrame): DataFrame =
+      pairs.withColumn("contrib", attenuatedDb(col("s_db"), col("dist_m")))
         .groupBy("g_lat", "g_lon")
         .agg(dbPowerSum(col("contrib")).as("db"))
+    def nearest(pairs: DataFrame): DataFrame =
+      pairs.groupBy("g_lat", "g_lon")
+        .agg(min(struct(col("dist_m"), col("s_lat"), col("s_lon"), col("s_db"), col("s_alt"))).as("nn"))
     def wrap(lon: Double): Double = lon - 360.0 * math.floor((lon + 180.0) / 360.0)
     // destination at `distM` along bearing `brg` (radians), longitude unwrapped
     def dest(lat: Double, lon: Double, brg: Double, distM: Double): (Double, Double) = {
@@ -193,8 +203,10 @@ class NoiseSpec extends SparkTestBase {
     (0 until 24).foreach { i =>
       val (lat, lon, srcs, step, n, bearings, edges) =
         genCase.pureApply(Gen.Parameters.default, Seed(20261017L + i))
-      val sources = srcs.map { case (dLat, dLon, db) =>
-        (math.max(-90.0, math.min(90.0, lat + dLat)), wrap(lon + dLon), db, 300.0)
+      // altitudes up to 12 km: the slant cutoff then bites well inside 20 km
+      val sources = srcs.zipWithIndex.map { case ((dLat, dLon, db), k) =>
+        (math.max(-90.0, math.min(90.0, lat + dLat)), wrap(lon + dLon), db,
+          Seq(300.0, 27.0, 3000.0, 12000.0)(k))
       }
       // the grid stays inside |lat| <= 90; its longitudes are left unwrapped
       val latLimit = 90.0 - n * Noise.latStepDeg(step) - 1e-6
@@ -205,7 +217,8 @@ class NoiseSpec extends SparkTestBase {
       } yield dest(sLat, sLon, brg, RMaxM + edges(j % edges.size))
       val g = grid.union(edgePts.toDF("g_lat", "g_lon"))
       val src = sources.toDF("s_lat", "s_lon", "s_db", "s_alt")
-      val expected = reference(g, src).orderBy("g_lat", "g_lon").collect()
+      def sorted(df: DataFrame) = df.orderBy("g_lat", "g_lon").collect()
+      val expected = sorted(reference(g, src, haversine, powerSum))
       assert(expected.nonEmpty, s"case $i has no pair in range")
       def rewritten(): Array[org.apache.spark.sql.Row] = {
         spark.experimental.extraOptimizations =
@@ -219,14 +232,25 @@ class NoiseSpec extends SparkTestBase {
             .filterNot(_ == graft.plans.BucketedRangeJoinRule)
         }
       }
-      Seq[(String, () => Array[org.apache.spark.sql.Row])](
-        "groundNoise" -> (() => Noise.groundNoise(g, src).orderBy("g_lat", "g_lon").collect()),
-        "groundNoiseBucketed" -> (() => Noise.groundNoiseBucketed(g, src).orderBy("g_lat", "g_lon").collect()),
-        "groundNoise under BucketedRangeJoinRule" -> (() => rewritten())).foreach { case (k, run) =>
-        val got = run()
-        assert(got.sameElements(expected),
-          s"case $i ($lat, $lon, $sources) $k: ${got.length} rows, reference ${expected.length}; " +
-            s"missing ${expected.diff(got).take(5).toSeq}")
+      val slantSum = sorted(reference(g, src, slant, powerSum))
+      val nearestSource = sorted(reference(g, src, rounded, nearest))
+      Seq[(String, Array[org.apache.spark.sql.Row], () => Array[org.apache.spark.sql.Row])](
+        ("groundNoise", expected, () => sorted(Noise.groundNoise(g, src))),
+        ("groundNoiseBucketed", expected, () => sorted(Noise.groundNoiseBucketed(g, src))),
+        ("groundNoise under BucketedRangeJoinRule", expected, () => rewritten()),
+        ("slant sum, nested loop", slantSum,
+          () => sorted(Noise.perCellDb(Noise.pairs(g, src, cells = false, slant)))),
+        ("slant sum, cells", slantSum,
+          () => sorted(Noise.perCellDb(Noise.pairs(g, src, cells = true, slant)))),
+        ("nearest source, nested loop", nearestSource,
+          () => sorted(nearest(Noise.pairs(g, src, cells = false, rounded)))),
+        ("nearest source, cells", nearestSource,
+          () => sorted(nearest(Noise.pairs(g, src, cells = true, rounded))))).foreach {
+        case (k, want, run) =>
+          val got = run()
+          assert(got.sameElements(want),
+            s"case $i ($lat, $lon, $sources) $k: ${got.length} rows, reference ${want.length}; " +
+              s"missing ${want.diff(got).take(5).toSeq}")
       }
     }
   }

@@ -4,50 +4,16 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Observation
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.operators.{Dedup, Observe}
+import graft.operators.Dedup
 
-/** In-flight quality metrics: the counters must ride the producing job (one
-  * pass) and report exact violation counts.
+/** In-flight metrics (`Dataset.observe`): the counters must ride the
+  * producing job, in one pass.
   */
 class ObserveSpec extends SparkTestBase {
   import spark.implicits._
-
-  test("withQualityMetrics reports nulls and negatives from the producing action") {
-    val df = Seq(
-      (Some(1L), 2.0), (None, 3.0), (Some(3L), -1.0),
-      (None, -4.0), (Some(5L), 0.0))
-      .toDF("user_id", "value")
-    val obs = new Observation("quality")
-    val observed = Observe.withQualityMetrics(df, obs,
-      notNull = Seq("user_id"), nonNegative = Seq("value"))
-    // one action; metrics resolve from it — no extra scan
-    observed.write.format("noop").mode("overwrite").save()
-    val m = obs.get
-    assert(m("n_rows") == 5L)
-    assert(m("null_user_id") == 2L)
-    assert(m("neg_value") == 2L)
-  }
-
-  test("metrics survive a downstream filter without a second pass") {
-    val df = spark.range(100).select(col("id"),
-      when(col("id") % 10 === 0, lit(null).cast("double"))
-        .otherwise(col("id").cast("double") - 50.0).as("v"))
-    val obs = new Observation("q2")
-    val out = Observe.withQualityMetrics(df, obs,
-      notNull = Seq("v"), nonNegative = Seq("v"))
-      .filter(col("id") < 1000) // arbitrary downstream work
-    assert(out.count() == 100)
-    val m = obs.get
-    assert(m("n_rows") == 100L)
-    assert(m("null_v") == 10L)
-    // negatives among non-null: ids 1..49 minus the null slots 10/20/30/40
-    assert(m("neg_v") == 45L)
-  }
 
   test("Bench.timeRows evaluates the whole output in one job and observes its row count") {
     // an RDD, not a local Seq: the optimizer would fold a local relation's

@@ -75,16 +75,17 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
   }
 
-  /** The noise kernels' partitioning (`Noise.byCount`): the plan's only
+  /** The noise pairing's partitioning (`Noise.byCount`): the plan's only
     * hash exchanges are one REPARTITION_BY_NUM exchange with
     * `spark.sql.shuffle.partitions` partitions on each of `keys` (per input,
     * in order), and no Exchange lies between the grid x sources pair join
-    * and any per-cell HashAggregate. Returns the final plan.
+    * and any per-cell aggregate (q123's struct argmin is a sort aggregate).
+    * Returns the final plan.
     */
   private def assertSumsInJoinStage(q: String, keys: Seq[Seq[String]]): SparkPlan = {
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
     val plan = queries.Registry.all.find(_.name == q).get.run(spark, dir)
       .queryExecution.executedPlan match {
@@ -106,7 +107,7 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       case other => other.children.exists(reachesPairJoin)
     }
     val perCell = plan.collect {
-      case a: HashAggregateExec if a.groupingExpressions.exists(_.references.exists(_.name == "g_lat")) => a
+      case a: BaseAggregateExec if a.groupingExpressions.exists(_.references.exists(_.name == "g_lat")) => a
     }
     assert(perCell.nonEmpty, s"$q: ${plan.treeString}")
     perCell.foreach(a => assert(reachesPairJoin(a), s"$q: ${plan.treeString}"))
@@ -128,6 +129,27 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val plan = assertSumsInJoinStage("q20_noise_bucketed", Seq(Seq("g_lat", "g_lon")))
     // the sources are broadcast onto the grid's partitioning; the pair join
     // probes on the cell key
+    val keys = plan.collect(pairJoin).collect { case j: HashJoin =>
+      (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+    }
+    assert(keys == Seq(Seq("cell_i", "cell_j", "cell_i", "cell_j")), plan.treeString)
+  }
+
+  test("q21 hash-partitions the grid by count, and sums per cell without another exchange") {
+    assertSumsInJoinStage("q21_noise_slant3d", Seq(Seq("g_lat", "g_lon")))
+  }
+
+  test("q123 pairs on the geo-cell key and takes the argmin in the join's stage; exchanges pinned") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.HashJoin
+    val q = queries.Registry.all.find(_.name == "q123_nearest_source").get
+    // the initial plan's exchanges, as q19's and q20's: the grid
+    // generation's broadcast, the events scan's round-robin, the sources'
+    // broadcast, the grid's exchange by count and the output sort's range
+    // exchange
+    val initial = q.run(spark, dir).queryExecution.executedPlan
+    assert(collect(initial) { case e: Exchange => e }.size == 5, initial.treeString)
+    val plan = assertSumsInJoinStage("q123_nearest_source", Seq(Seq("g_lat", "g_lon")))
     val keys = plan.collect(pairJoin).collect { case j: HashJoin =>
       (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
     }
